@@ -858,12 +858,12 @@ class Index:
         # offsets term-vectors sidecar (FieldConfig.offsets fields only);
         # None when no field opted in
         self.tv_offsets = tv_offsets
-        # saved-layout postings path + cached pyarrow dataset (set by
-        # Index.load; None while the index only exists as DataFrames)
-        self.postings_path: str | None = None
-        self._pa_postings = None
-        self.term_stats_path: str | None = None
-        self._pa_term_stats = None
+        # saved-layout directories the driver-direct point reader serves
+        # from (Searcher's local tier): the index_dir of a loaded index,
+        # every segment's dir for a streaming union; None while the index
+        # only exists as DataFrames
+        self.saved_dirs: tuple | None = None
+        self._saved_tables: dict = {}
         from montezuma_spark.index.deletions import load_holes, load_tombstones
 
         # sorted tombstoned docids (.del bitset analog — see deletions.py)
@@ -903,11 +903,13 @@ class Index:
     def delete_docs_by_key(self, keys) -> int:
         """Delete by stable document key (url) — the key-based replace hook
         used by update (src/index/index.lisp:184-192, 266-328)."""
+        from montezuma_spark.search.searcher import _terms_predicate
+
         keys = list(keys)
         if not keys:
             return 0
         rows = (
-            self.doc_map.filter(F.col("key").isin(keys))
+            self.doc_map.filter(_terms_predicate("key", keys))
             .select("docid")
             .collect()
         )
@@ -1169,40 +1171,36 @@ class Index:
                 spark.read.parquet(tv_dir) if os.path.isdir(tv_dir) else None
             ),
         )
-        # the saved-layout marker: self.postings is literally this parquet
-        # directory, so the driver-direct arrow fetch (Searcher's local
-        # tier) may read it without a Spark job. Deliberately NOT set for
-        # in-memory/derived indexes (add_indexes unions, streaming views).
-        idx.postings_path = f"{index_dir}/postings"
-        idx.term_stats_path = f"{index_dir}/term_stats"
+        # the saved-layout marker: self.postings/term_stats are literally
+        # these parquet directories, so the driver-direct point reader
+        # (Searcher's local tier) may serve them without a Spark job. A
+        # streaming union of saved segments lists every segment's dir
+        # (IncrementalIndexer._union_index); other derived indexes
+        # (add_indexes, optimize, expunge) stay DataFrame-only.
+        idx.saved_dirs = (index_dir,)
         return idx
 
-    def _postings_dataset(self):
-        """Cached pyarrow dataset over the saved postings directory (None
-        for unsaved indexes). Point-query IO path — see
-        Searcher._fetch_postings_pdf."""
-        path = getattr(self, "postings_path", None)
-        if path is None:
+    def _saved_table(self, name: str):
+        if not self.saved_dirs:
             return None
-        if self._pa_postings is None:
-            import pyarrow.dataset as ds
+        tbl = self._saved_tables.get(name)
+        if tbl is None:
+            from montezuma_spark.index.pointread import SavedTable
 
-            self._pa_postings = ds.dataset(path, format="parquet")
-        return self._pa_postings
+            tbl = SavedTable([f"{d}/{name}" for d in self.saved_dirs])
+            self._saved_tables[name] = tbl
+        return tbl
+
+    def _postings_dataset(self):
+        """Point reader over the saved postings (None for unsaved
+        indexes) — see Searcher._fetch_postings_pdf."""
+        return self._saved_table("postings")
 
     def _term_stats_dataset(self):
-        """Cached pyarrow dataset over the saved term_stats directory
-        (None for unsaved indexes) — the dictionary analog of
-        ``_postings_dataset``: exact df seeks read the range-sorted
-        parquet driver-direct instead of scheduling a Spark job."""
-        path = getattr(self, "term_stats_path", None)
-        if path is None:
-            return None
-        if self._pa_term_stats is None:
-            import pyarrow.dataset as ds
-
-            self._pa_term_stats = ds.dataset(path, format="parquet")
-        return self._pa_term_stats
+        """Point reader over the saved term_stats (None for unsaved
+        indexes): exact df seeks read the range-sorted dictionary
+        driver-direct instead of scheduling a Spark job."""
+        return self._saved_table("term_stats")
 
 
 def build_index(

@@ -1637,10 +1637,11 @@ class ShardEval:
         ascending) evaluate in doubling-budget chunks and the scan stops
         once k matches exist — the positions fetch + window kernels
         never touch the tail of a hot intersection. Returns None when
-        the shape can't exit early (no k, tiny df)."""
+        the shape can't exit early (no k, k <= 0, tiny df)."""
         k = self.plan.k
         if (
             k is None
+            or k <= 0
             or not isinstance(node, SpanNearQuery)
             or not node.terms
         ):

@@ -252,10 +252,11 @@ class Searcher:
         return self._sorted_terms.get(field, [])
 
     def _lookup_dfs(self, pairs) -> dict:
-        """df for exact (field, term) pairs — ONE ``isin``-filtered collect
-        for all cache misses (term-infos-io.lisp:219-232 seek analog);
-        absent terms resolve to df=0. The predicate pushes into the
-        parquet dictionary scan on a saved index."""
+        """df for exact (field, term) pairs — ONE seek for all cache misses
+        (term-infos-io.lisp:219-232 analog): a footer-pruned point read on
+        a saved layout (a streaming union's segments included), an
+        ``isin``-filtered collect otherwise; absent terms resolve to
+        df=0."""
         pairs = set(pairs)
         if self._preload:
             d = self._dictionary()
@@ -268,39 +269,21 @@ class Searcher:
             by_field: dict[str, list] = {}
             for f, t in missing:
                 by_field.setdefault(f, []).append(t)
-            dset = self.index._term_stats_dataset()
-            if dset is not None:
-                # saved layout: driver-direct arrow seek into the
-                # range-sorted dictionary (the .tii analog) — BETWEEN for
-                # row-group min/max pruning + isin for exactness, no
-                # Spark job (the cold-query dictionary seek was the
-                # largest share of the ~0.13 s saved-tier cold latency)
-                import pyarrow.compute as pc
-
-                filt = None
-                for f, ts in sorted(by_field.items()):
-                    ts = sorted(ts)
-                    if len(ts) == 1:
-                        tc = pc.field("term") == ts[0]
-                    else:
-                        tc = (
-                            (pc.field("term") >= ts[0])
-                            & (pc.field("term") <= ts[-1])
-                            & pc.field("term").isin(ts)
-                        )
-                    c = (pc.field("field") == f) & tc
-                    filt = c if filt is None else (filt | c)
-                tbl = dset.to_table(
-                    columns=["field", "term", "df"], filter=filt
-                )
-                found = {
-                    (f, t): int(d)
-                    for f, t, d in zip(
-                        tbl.column("field").to_pylist(),
-                        tbl.column("term").to_pylist(),
-                        tbl.column("df").to_pylist(),
-                    )
-                }
+            reader = self.index._term_stats_dataset()
+            if reader is not None:
+                # saved layout: driver-direct footer-pruned seek into the
+                # range-sorted dictionary (the .tii analog), no Spark job
+                # (the cold-query dictionary seek was the largest share of
+                # the ~0.13 s saved-tier cold latency). A streaming union
+                # holds one row per segment for a (field, term): df SUMS.
+                tbl = reader.read(by_field, ["field", "term", "df"])
+                found: dict = {}
+                for f, t, d in zip(
+                    tbl.column("field").to_pylist(),
+                    tbl.column("term").to_pylist(),
+                    tbl.column("df").to_pylist(),
+                ):
+                    found[(f, t)] = found.get((f, t), 0) + int(d)
             else:
                 cond = None
                 for f, ts in sorted(by_field.items()):
@@ -1137,7 +1120,6 @@ class Searcher:
         """Rows for {field: terms} through the cell cache, fetching every
         missing term in ONE arrow point read (callers pre-gate on
         ``_cell_cache_max`` > 0 and a saved layout)."""
-        dset = self.index._postings_dataset()
         from montezuma_spark.codec.postings import BOOST_TERM
 
         want = [(f, t) for f, ts in sorted(needed.items())
@@ -1175,7 +1157,9 @@ class Searcher:
                     fetch_boost = True
                 else:
                     fetch.setdefault(f, set()).add(t)
-            pdf = self._arrow_cells_pdf(dset, fetch, need_pos, fetch_boost)
+            pdf = self._arrow_cells_pdf(
+                self.index._postings_dataset(), fetch, need_pos, fetch_boost
+            )
             boost_mask = (
                 pdf["term"] == BOOST_TERM if len(pdf) else None
             )
@@ -1235,22 +1219,22 @@ class Searcher:
     def _fetch_postings_pdf(self, resolved: Query, need_pos: bool):
         """Matched postings cells as a pandas frame for the local tier.
 
-        Saved indexes read the cells STRAIGHT from the range-sorted
-        parquet files with pyarrow — the postings analog of the term-infos
-        dictionary seek: a point read needs file IO (min/max row-group
-        pruning, which pyarrow applies from the parquet stats the save
-        layout guarantees), not a scheduled Spark job. At 1M docs this is
+        Saved indexes (and streaming unions of saved segments) read the
+        cells STRAIGHT from the range-sorted parquet files — the postings
+        analog of the term-infos dictionary seek: a point read needs file
+        IO (row groups pruned by the footers' (field, term) min/max, see
+        index/pointread.py), not a scheduled Spark job. At 1M docs this is
         the difference between ~50 ms and ~350 ms per query; on a real
         cluster the driver fetches the same few MB from object storage.
         In-memory indexes (no saved layout) keep the pruned Spark scan —
         identical rows either way."""
-        dset = self.index._postings_dataset()
-        if dset is None:
+        reader = self.index._postings_dataset()
+        if reader is None:
             postings, _ = self._filtered_postings(resolved, need_pos)
             return postings.toPandas()
         needed = self._needed_terms(resolved)
         return self._arrow_cells_pdf(
-            dset, needed, need_pos,
+            reader, needed, need_pos,
             # zero-term trees (docid sets / constant-score wrappers) score
             # as constants and never consult doc boosts — skip the marker
             # cells, whose size tracks the CORPUS, not the query
@@ -1260,48 +1244,20 @@ class Searcher:
             ),
         )
 
-    def _arrow_cells_pdf(self, dset, needed: dict, need_pos: bool,
+    def _arrow_cells_pdf(self, reader, needed: dict, need_pos: bool,
                          include_boost: bool):
         """Driver-direct parquet point read of the cells for explicit
         {field: terms} sets (see ``_fetch_postings_pdf`` for the layout
         contract that makes this a row-group-pruned seek)."""
-        import pyarrow.compute as pc
-
         from montezuma_spark.codec.postings import BOOST_TERM
 
-        filt = None
-        for f, terms in needed.items():
-            ts = sorted(terms)
-            # pyarrow prunes row groups from parquet min/max stats for
-            # comparison predicates but NOT for isin (set membership), so
-            # a bare isin reads every row group (~30x slower here):
-            # single term → equality; term set → [min,max] BETWEEN (the
-            # pruner) AND isin (the exact filter)
-            if not ts:
-                continue  # e.g. a wildcard that expanded to nothing
-            if len(ts) == 1:
-                tc = pc.field("term") == ts[0]
-            else:
-                tc = (
-                    (pc.field("term") >= ts[0])
-                    & (pc.field("term") <= ts[-1])
-                    & pc.field("term").isin(ts)
-                )
-            c = (pc.field("field") == f) & tc
-            filt = c if filt is None else (filt | c)
-        if include_boost:
-            bc = pc.field("term") == BOOST_TERM
-            filt = bc if filt is None else (filt | bc)
-        if filt is None:
-            filt = pc.field("term") == ""  # matches nothing (parity with
-            # _filtered_postings' lit(False) branch)
         cols = [
             "field", "term", "shard", "df", "cf", "postings",
             "blk_first", "blk_last", "blk_n", "blk_off", "blk_codes_len",
             "blk_ext_len", "blk_maxtf", "blk_mindl",
         ]
         # impact-front metadata: absent on pre-impact saved layouts
-        have = set(dset.schema.names)
+        have = reader.column_names()
         cols += [
             c
             for c in ("blk_imp_n", "blk_imp_tf", "blk_imp_dl")
@@ -1310,7 +1266,9 @@ class Searcher:
         if need_pos:
             cols += ["positions", "pos_off"]
         self._arrow_fetches += 1
-        return dset.to_table(columns=cols, filter=filt).to_pandas()
+        return reader.read(
+            needed, cols, BOOST_TERM if include_boost else None
+        ).to_pandas()
 
     # ------------------------------------------------------------------- API
     def search(self, query: Query, k: int | None = 10,

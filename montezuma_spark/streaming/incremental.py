@@ -10,8 +10,11 @@ allocated from the manifest — and the manifest commit is an atomic rename
 
 Query side: ``multi_index`` unions the segment tables; the shard kernel
 merges per-(term, shard) cells across segments by docid order (the
-multi-reader analog, src/index/multi-reader.lisp). ``compact()`` merges all
-segments into one (optimize, src/index/index-writer.lisp:94-107).
+multi-reader analog, src/index/multi-reader.lisp). Every segment is a saved
+layout, so the union also lists the segments' directories and the
+Searcher's local tier reads them driver-direct (df summed across segments,
+no Spark job per query). ``compact()`` merges all segments into one
+(optimize, src/index/index-writer.lisp:94-107).
 
 Streaming entry: ``writeStream.foreachBatch(indexer.foreach_batch())``.
 Exactly-once: the manifest records the last applied streaming batch_id —
@@ -120,10 +123,10 @@ class IncrementalIndexer:
         if not man["segments"]:
             return 0
         idx = self.multi_index()
-        from pyspark.sql import functions as F
+        from montezuma_spark.search.searcher import _terms_predicate
 
         rows = (
-            idx.doc_map.filter(F.col("key").isin(keys))
+            idx.doc_map.filter(_terms_predicate("key", keys))
             .select("docid")
             .collect()
         )
@@ -246,6 +249,11 @@ class IncrementalIndexer:
             term_stats, stats, index_dir=None,
             build_report={"segments": len(segs)},
         )
+        # every segment is a saved (field, term) range layout: the
+        # Searcher serves the union driver-direct from the segments' own
+        # files (df summed across them, cells merged by the kernel's
+        # blk_first order) — no Spark job per query
+        idx.saved_dirs = tuple(d for s in segs for d in s.saved_dirs)
         if tombstones:
             import numpy as np
 

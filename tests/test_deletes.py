@@ -288,3 +288,36 @@ def test_streaming_update_by_key(spark, tmp_path):
     assert not ix.manifest()["tombstones"]
     s3 = Searcher(compacted)
     assert len(s3.matching_docids(TermQuery("text", "zebrafish"))) == 1
+
+
+def test_delete_by_key_quote_backslash_keys(spark, tmp_path):
+    """Key deletes go through searcher._terms_predicate: one SQL IN for a
+    large all-safe key list, the literal isin fallback as soon as any key
+    holds a quote or backslash — both must tombstone exactly the keyed
+    docs, on a saved Index and on an IncrementalIndexer."""
+    pdf = synth_web_pages_pdf(80)
+    odd = ["http://example.com/it's", "http://example.com/back\\slash'x"]
+    pdf.loc[0, "url"], pdf.loc[1, "url"] = odd
+    safe = sorted(pdf["url"].iloc[2:42])          # 40 keys: F.expr IN path
+    assert len(safe) >= 32
+    docs = spark.createDataFrame(pdf)
+
+    def keyed(ix, keys):
+        return {r["docid"] for r in ix.doc_map.filter(
+            ix.doc_map["key"].isin(keys)).collect()}
+
+    for keys in (safe, odd + safe[:35]):
+        idx = build_index(spark, docs, CFG,
+                          index_dir=str(tmp_path / f"ix{len(keys)}"))
+        want = keyed(idx, keys)
+        assert len(want) == len(keys)
+        assert idx.delete_docs_by_key(keys) == len(keys)
+        assert set(idx.tombstones.tolist()) == want
+    inc = IncrementalIndexer(spark, str(tmp_path / "incr"), CFG)
+    inc.add_batch(docs, batch_id=0)
+    keys = odd + safe[:35]
+    want = keyed(inc.multi_index(), keys)
+    assert inc.delete_by_key(keys) == len(keys)
+    assert set(inc.manifest()["tombstones"]) == want
+    s = Searcher(inc.multi_index())
+    assert s.count(MatchAllQuery()) == 80 - len(keys)

@@ -194,3 +194,21 @@ def test_k_zero_returns_empty_everywhere(spark, corpus):
               bool_query((TermQuery("text", "spark"), SHOULD),
                          (TermQuery("text", "index"), SHOULD))):
         assert s.top_docs(q, k=0) == []
+
+
+def test_early_span_negative_k_goes_exhaustive(spark, corpus):
+    """A negative k must fall to the exhaustive span eval (the k<=0 guard
+    every pruned/early path carries), never the docid-order early exit."""
+    from montezuma_spark.search import SpanNearQuery
+
+    idx, _ = corpus
+    s = Searcher(idx)
+    q = SpanNearQuery.of("text", ["spark", "index"], slop=3)
+    for k in (-1, 0):
+        plan, resolved, need_pos = s._compile(q, k)
+        ev = ShardEval(plan, s._fetch_postings_pdf(resolved, need_pos))
+        assert ev._try_early_span(resolved) is None
+        got, want = ev.eval_top(resolved), ev.eval(resolved)
+        assert len(want[0]) > 0  # not vacuous
+        assert got[0].tolist() == want[0].tolist()
+        assert got[1].tolist() == want[1].tolist()

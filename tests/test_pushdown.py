@@ -294,3 +294,55 @@ def test_local_tier_arrow_fetch(spark, saved):
     assert sm.top_docs(TermQuery("text", "merge"), k=10) == \
         Searcher(saved).top_docs(TermQuery("text", "merge"), k=10)
     assert sm._arrow_fetches == 0
+
+
+def test_saved_table_footer_pruned_reads(tmp_path):
+    """The point reader prunes row groups by (field, term) min/max, keeps
+    groups whose footer has no statistics, returns exactly the brute-force
+    rows across several directories, and raises on a missing or empty
+    directory instead of answering empty."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from montezuma_spark.codec.postings import BOOST_TERM
+    from montezuma_spark.index.pointread import SavedTable
+
+    rows = sorted(
+        (f, t, i) for i, (f, t) in enumerate(
+            [(f, f"t{j:03d}") for f in ("body", "title") for j in range(60)]
+            + [("body", BOOST_TERM), ("title", BOOST_TERM)]
+        )
+    )
+    dirs = []
+    for n, stats in (("a", True), ("b", False)):
+        d = tmp_path / n
+        d.mkdir()
+        part = rows[::2] if n == "a" else rows[1::2]
+        tbl = pa.table({"field": [r[0] for r in part],
+                        "term": [r[1] for r in part],
+                        "df": [r[2] for r in part]})
+        pq.write_table(tbl, str(d / "part-00000.parquet"),
+                       row_group_size=8, write_statistics=stats)
+        (d / "_SUCCESS").write_text("")
+        dirs.append(str(d))
+    needed = {"body": {"t001", "t002", "t050", "zzz"}, "title": {"t010"}}
+    for boost in (None, BOOST_TERM):
+        got = SavedTable(dirs).read(needed, ["field", "term", "df"], boost)
+        want = sorted(r for r in rows if r[1] in needed.get(r[0], ())
+                      or r[1] == boost)
+        assert sorted(zip(*[got.column(c).to_pylist()
+                            for c in ("field", "term", "df")])) == want
+    # the statistics-bearing file prunes one term to its group (plus, at
+    # most, the group straddling the body/title edge, whose term range
+    # spans both fields); the statistics-free file keeps every group
+    from montezuma_spark.index.pointread import _keep
+
+    (_, _, ba), (_, _, bb) = SavedTable(dirs).footers()
+    wants = [("title", ["t010"])]
+    assert 1 <= sum(_keep(x, wants, None) for x in ba) <= 2 < len(ba)
+    assert all(_keep(x, wants, None) for x in bb)
+    (tmp_path / "b" / "part-00000.parquet").unlink()
+    with pytest.raises(FileNotFoundError):
+        SavedTable(dirs).read(needed, ["field", "term", "df"])
+    with pytest.raises(FileNotFoundError):
+        SavedTable([str(tmp_path / "gone")]).footers()

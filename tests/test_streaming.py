@@ -1,12 +1,20 @@
 """Incremental / Structured Streaming index tests: segment-per-batch,
 multi-segment query parity, compaction, exactly-once batch replay."""
 
+import pandas as pd
 import pytest
 
 from montezuma_spark.fixtures import synth_web_pages_df, synth_web_pages_pdf
 from montezuma_spark.index import FieldConfig, IndexConfig, build_index
 from montezuma_spark.oracle import OracleIndex
-from montezuma_spark.search import MUST, Searcher, TermQuery, bool_query
+from montezuma_spark.search import (
+    MUST,
+    SHOULD,
+    PhraseQuery,
+    Searcher,
+    TermQuery,
+    bool_query,
+)
 from montezuma_spark.streaming import IncrementalIndexer
 
 CFG = IndexConfig(
@@ -175,3 +183,116 @@ def test_tiered_merge_with_tombstones(spark, tmp_path):
     from montezuma_spark.search import MatchAllQuery
 
     assert s.count(MatchAllQuery()) == 85
+
+
+# ------------------------------------------------ saved-tier union serving
+@pytest.fixture(scope="module")
+def upd_union(spark, tmp_path_factory):
+    """3 saved segments; the third is an update_batch that re-adds 10 of
+    the first segment's keys with new text (10 manifest tombstones)."""
+    d = str(tmp_path_factory.mktemp("upd_union"))
+    ix = IncrementalIndexer(spark, d, CFG)
+    pdf = synth_web_pages_pdf(120)
+    ix.add_batch(spark.createDataFrame(pdf.iloc[0:40]), batch_id=0)
+    ix.add_batch(spark.createDataFrame(pdf.iloc[40:80]), batch_id=1)
+    moved = pdf.iloc[0:10].copy()
+    moved["text"] = pdf["text"].iloc[60:70].to_numpy()
+    upd = pd.concat([moved, pdf.iloc[80:120]], ignore_index=True)
+    ix.update_batch(spark.createDataFrame(upd), batch_id=2)
+    man = ix.manifest()
+    assert len(man["segments"]) == 3 and len(man["tombstones"]) == 10
+    return ix
+
+
+def _parity_queries():
+    t = lambda w: TermQuery("text", w)  # noqa: E731
+    return {
+        "term": t("spark"),
+        "and2": bool_query((t("spark"), MUST), (t("index"), MUST)),
+        "or3": bool_query((t("merge"), SHOULD), (t("shard"), SHOULD),
+                          (t("vector"), SHOULD)),
+        "phrase": PhraseQuery.of("text", ["spark", "index"]),
+    }
+
+
+def test_union_local_tier_identical_to_distributed(spark, upd_union,
+                                                   monkeypatch):
+    """The union served driver-direct from its segments' saved files
+    returns the distributed tier's exact docids and float scores."""
+    import montezuma_spark.search.kernel as kmod
+
+    # small corpus: pin the WAND / pruned machinery on, driver side only
+    monkeypatch.setattr(kmod, "PRUNE_MIN_POSTINGS", 0)
+    u = upd_union.multi_index()
+    assert len(u.saved_dirs) == 3
+    local, dist = Searcher(u), Searcher(u, distributed=True)
+    tombs = set(int(d) for d in u.tombstones)
+    qs = _parity_queries()
+    for name, q in qs.items():
+        got = local.top_docs(q, k=10)
+        assert got == dist.top_docs(q, k=10), name
+        assert got and not tombs & {d for d, _ in got}, name
+        assert local.count(q) == dist.count(q), name
+    assert local._arrow_fetches > 0  # the saved local tier served them
+    rows = lambda s: [tuple(r) for r in s.search_batch(qs, k=10).collect()]  # noqa: E731
+    assert rows(Searcher(u)) == rows(dist)
+
+
+def test_union_df_sums_across_segments(spark, upd_union):
+    from montezuma_spark.index import Index
+
+    u = upd_union.multi_index()
+    segs = [Index.load(spark, e["dir"])
+            for e in upd_union.manifest()["segments"]]
+    key = ("text", "spark")
+    per_seg = [Searcher(s)._lookup_dfs([key])[key] for s in segs]
+    assert sum(df > 0 for df in per_seg) >= 2
+    assert Searcher(u)._lookup_dfs([key])[key] == sum(per_seg)
+    spark_df = (u.term_stats.filter("field = 'text' AND term = 'spark'")
+                .collect()[0]["df"])
+    assert spark_df == sum(per_seg)
+
+
+def test_union_term_query_starts_no_spark_job(spark, upd_union):
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    u = upd_union.multi_index()
+    s = Searcher(u)
+    q = TermQuery("text", "index")
+    sc.setJobGroup("union-local-probe", "union term query")
+    try:
+        before = set(tracker.getJobIdsForGroup("union-local-probe"))
+        assert s.top_docs(q, k=5)
+        after = set(tracker.getJobIdsForGroup("union-local-probe"))
+        assert after == before
+        assert s._arrow_fetches == 1
+        # the same probe on the distributed tier does start jobs
+        Searcher(u, distributed=True).top_docs(q, k=5)
+        assert set(tracker.getJobIdsForGroup("union-local-probe")) - after
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_stale_union_never_serves_empty(spark, tmp_path):
+    """A Searcher opened before compact() removed its segment files
+    either raises or returns its pre-compact answer — never an empty
+    one."""
+    ix = IncrementalIndexer(spark, str(tmp_path / "stale"), CFG)
+    for i, b in enumerate(_batches(spark, n=60, parts=2)):
+        ix.add_batch(b, batch_id=i)
+    warm_q, cold_q = TermQuery("text", "spark"), TermQuery("text", "merge")
+    want = {q: Searcher(ix.multi_index()).top_docs(q, k=10)
+            for q in (warm_q, cold_q)}
+    assert all(want.values())
+    warm = Searcher(ix.multi_index())
+    assert warm.top_docs(warm_q, k=10) == want[warm_q]
+    unopened = Searcher(ix.multi_index())
+    ix.compact()
+    for s, q in ((warm, warm_q), (warm, cold_q), (unopened, warm_q)):
+        try:
+            got = s.top_docs(q, k=10)
+        except FileNotFoundError:
+            continue
+        assert got == want[q]
+    with pytest.raises(FileNotFoundError):
+        unopened.top_docs(cold_q, k=10)
