@@ -875,6 +875,17 @@ class Index:
         # in the holes.json sidecar; survives undelete_all by design.
         self.holes: np.ndarray = load_holes(index_dir)
         self._masked_cache: tuple | None = None
+        # DataFrames build_index persisted for this index (see unpersist)
+        self._build_cache: tuple = ()
+
+    def unpersist(self) -> None:
+        """Release the frames ``build_index`` persisted while building this
+        index (the range-sorted source and the segment cells). The index
+        stays usable: its frames recompute from lineage, or read the saved
+        layout."""
+        for df in self._build_cache:
+            df.unpersist()
+        self._build_cache = ()
 
     # ------------------------------------------------------------- deletions
     def delete_docs(self, docids) -> int:
@@ -1361,4 +1372,5 @@ def build_index(
     if index_dir:
         idx = idx.save(index_dir)
         idx.build_report["build_seconds"] = time.time() - t0
+    idx._build_cache = (ranged, postings_all)
     return idx

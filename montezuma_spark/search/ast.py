@@ -131,9 +131,9 @@ class RegexpQuery(Query):
     subset Java, RE2 and Python agree on: literals, explicit character
     classes (``[0-9]``), quantifiers, alternation, groups. AVOID the
     shorthand classes ``\\d``/``\\w``/``\\s`` — they are Unicode-wide in
-    Python but ASCII-only in Java, so the preload tier (Python ``re``)
-    and the distributed tier (JVM ``rlike``) could disagree on
-    non-ASCII vocabularies."""
+    Python but ASCII-only in Java. Every engine tier expands through the
+    JVM ``rlike``, so only a Python ``re`` oracle could disagree with the
+    engine on non-ASCII vocabularies."""
 
     field: str
     pattern: str

@@ -39,7 +39,6 @@ from montezuma_spark.codec.postings import (
     CORPUS_STATS_KEY,
     decode_cell,
     decode_cell_rows,
-    decode_positions,
     decode_positions_rows,
 )
 from montezuma_spark.search.ast import (
@@ -89,11 +88,6 @@ class CompiledPlan:
     # weights), query.lisp:9-15) — 1.0 unless the similarity sets
     # normalize_query; applied once to final scores (ranking-safe)
     query_norm: float = 1.0
-    # hot-serving flag: set by the preload tier, enables the
-    # decode-once-per-row caches (full postings + full positions) on the
-    # shared CellRow objects; the distributed path keeps block-selective
-    # decodes (a worker task sees each row once)
-    hot: bool = False
     # sorted tombstoned docids (the .del bitset analog,
     # src/util/bit-vector.lisp + segment-reader.lisp:106-113). Shipped
     # inside the serialized plan = a broadcast to every shard kernel;
@@ -117,8 +111,9 @@ TOMB_FIELD = "\x00tomb"
 
 # lightweight parsed form of one postings-cell row. pandas itertuples costs
 # ~45 us/row of pure accessor overhead (and rebuilds its namedtuple class
-# per call) — at ~20 cells/query that was 74% of hot-serving latency; a
-# one-time parse into these tuples makes per-query cell access free.
+# per call) — at ~20 cells/query that was 74% of driver-local serving
+# latency; a one-time parse into these tuples makes per-query cell access
+# free.
 CELL_COLS = ("field", "term", "shard", "postings", "positions", "pos_off",
              "blk_first", "blk_last", "blk_n", "blk_off", "blk_codes_len",
              "blk_ext_len", "blk_maxtf", "blk_mindl",
@@ -127,12 +122,13 @@ CELL_COLS = ("field", "term", "shard", "postings", "positions", "pos_off",
 
 class CellRow:
     """One parsed cell row. ``full`` memoizes the FULL-cell decode
-    (docids, tfs, dls): rows are shared across queries in the preload
-    tier, and a cell's decode is query-independent, so the hot serving
-    path decodes each cell once ever (callers never mutate the returned
-    arrays — they mask/copy). Cost: ~24 B/posting for queried terms,
-    bounded by the preload guard. Worker-side rows are per-task, where
-    the cache is just a same-query memo."""
+    (docids, tfs, dls) and ``full_pos`` the full positions stream, each
+    set only when a query happens to decode every block: rows in the
+    Searcher's cell cache are shared across queries, and a cell's decode
+    is query-independent, so later queries reuse the memo (callers never
+    mutate the returned arrays — they mask/copy). Cost: ~24 B/posting
+    (~8 B/position), charged against the cell cache's byte budget.
+    Worker-side rows are per-task, where the memo is a same-query one."""
 
     __slots__ = (*CELL_COLS, "full", "full_pos")
 
@@ -430,8 +426,7 @@ class ShardEval:
         Cross-query memo (shared rows, e.g. the cell LRU cache tier): a
         row whose positional decode happened to cover ALL blocks yields
         exactly the full positions stream, so it's stored as
-        ``row.full_pos`` for free and reused by later queries — the
-        opportunistic form of the preload tier's eager memo. Narrowed
+        ``row.full_pos`` for free and reused by later queries. Narrowed
         decodes never memoize (the stream would be partial) and never
         get slower."""
         W = len(wanted)
@@ -666,10 +661,10 @@ class ShardEval:
         decodes, so equal-score lower-docid docs are always found, and the
         decoded set is a superset of the true top-k (callers re-sort with
         the (score desc, docid asc) tie-break). Returns None when the
-        plan shape can't prune (no k, preload full-decode cache active,
-        non-positive bound scale, or metadata-free cells)."""
+        plan shape can't prune (no k, non-positive bound scale, or
+        metadata-free cells)."""
         k = self.plan.k
-        if k is None or k <= 0 or self.plan.hot:
+        if k is None or k <= 0:
             return None
         rows = self.cells.get((field, term))
         if not rows:
@@ -1054,167 +1049,6 @@ class ShardEval:
             np.arange(total) - np.repeat(out_starts, lens)
         )
 
-    def _positions_flat(self, field, term, wanted: np.ndarray):
-        """Positions of ``wanted`` docids for (field, term), doc-major →
-        (flat positions, per-doc lens). Fully vectorized — the phrase
-        path never touches per-doc python lists."""
-        W = len(wanted)
-        rows = self.cells.get((field, term)) or []
-        if not rows:
-            return np.empty(0, dtype=np.int64), np.zeros(W, dtype=np.int64)
-        if len(rows) == 1:
-            return self._positions_flat_row(rows[0], wanted)
-        if self.plan.hot:
-            # hot tier: per-row full_pos memos are shared across queries —
-            # stitch per-row results back into wanted order with one gather
-            lens_full = np.zeros(W, dtype=np.int64)
-            parts = []  # (wanted-index array, flat, lens)
-            for row in rows:
-                if not len(row.blk_first):
-                    continue
-                lo, hi = row.blk_first[0], row.blk_last[-1]
-                mask = (wanted >= lo) & (wanted <= hi)
-                if not mask.any():
-                    continue
-                widx = np.flatnonzero(mask)
-                f, ln = self._positions_flat_row(row, wanted[mask])
-                lens_full[widx] = ln
-                parts.append((widx, f, ln))
-            bounds = np.cumsum(lens_full) - lens_full
-            out = np.empty(int(lens_full.sum()), dtype=np.int64)
-            for widx, f, ln in parts:
-                tgt = np.repeat(bounds[widx], ln) + (
-                    np.arange(len(f))
-                    - np.repeat(np.cumsum(ln) - ln, ln)
-                )
-                out[tgt] = f
-            return out, lens_full
-        # cold multi-cell path: batch BOTH decodes (doc streams for block
-        # tf runs, then positions) across every row in one vectorized pass
-        # each. Rows hold disjoint ascending docid ranges, so the
-        # concatenated d_all stays sorted and ONE searchsorted maps all
-        # wanted docids — no per-row stitch at all.
-        cell_rows, pos_rows_pending = [], []
-        for row in rows:
-            if not len(row.blk_first):
-                continue
-            lo = np.searchsorted(wanted, row.blk_first[0])
-            hi = np.searchsorted(wanted, row.blk_last[-1], side="right")
-            if lo == hi:
-                continue
-            meta = self._meta(row)
-            sel = self._blocks_for(meta, wanted[lo:hi])
-            ns = np.asarray(meta["n"], dtype=np.int64)
-            cell_rows.append((bytes(row.postings), meta, sel))
-            pos_rows_pending.append(
-                (row, sel, ns[sel] if sel is not None else ns)
-            )
-        if not cell_rows:
-            return np.empty(0, dtype=np.int64), np.zeros(W, dtype=np.int64)
-        d_all, t_all, _dls, row_n = decode_cell_rows(
-            cell_rows, codec=self.plan.codec
-        )
-        if len(d_all) == 0:
-            return np.empty(0, dtype=np.int64), np.zeros(W, dtype=np.int64)
-        ends_n = np.cumsum(row_n)
-        pos_rows = [
-            (
-                bytes(row.positions), list(row.pos_off), sel,
-                t_all[ends_n[k] - row_n[k] : ends_n[k]], ns_sel,
-            )
-            for k, (row, sel, ns_sel) in enumerate(pos_rows_pending)
-        ]
-        flat = decode_positions_rows(pos_rows, codec=self.plan.codec)
-        pb = np.concatenate([[0], np.cumsum(t_all)])
-        idx = np.searchsorted(d_all, wanted)
-        idx_c = np.clip(idx, 0, len(d_all) - 1)
-        found = d_all[idx_c] == wanted
-        lens = np.where(found, pb[idx_c + 1] - pb[idx_c], 0)
-        return self._gather_runs(flat, pb[idx_c], lens), lens
-
-    def _positions_flat_row(self, row, wanted: np.ndarray):
-        cached = getattr(row, "full_pos", None)
-        if cached is None and self.plan.hot and hasattr(row, "full_pos"):
-            cached = row.full_pos = self._full_positions(row)
-        if cached is not None:
-            d_all, t_all, flat, pb = cached
-        else:
-            d_all, t_all, _dls, block_of, handle = self._decode_row(
-                row, wanted, with_block_info=True
-            )
-            if len(d_all) == 0:
-                return (
-                    np.empty(0, dtype=np.int64),
-                    np.zeros(len(wanted), dtype=np.int64),
-                )
-            row, meta, blocks = handle
-            ns = np.asarray(meta["n"], dtype=np.int64)[blocks]
-            bounds = np.concatenate([[0], np.cumsum(ns)])
-            block_tfs = {
-                int(b): t_all[bounds[i] : bounds[i + 1]]
-                for i, b in enumerate(blocks)
-            }
-            pos_by_block = decode_positions(
-                bytes(row.positions), list(row.pos_off), meta, block_tfs,
-                codec=self.plan.codec,
-            )
-            # one flat stream in decoded-block order; posting j's run is
-            # pb[j]:pb[j+1] (t_all aligns with d_all)
-            flat = (
-                np.concatenate([pos_by_block[int(b)] for b in blocks])
-                if len(blocks)
-                else np.empty(0, dtype=np.int64)
-            )
-            pb = np.concatenate([[0], np.cumsum(t_all)])
-            if len(blocks) == len(meta["n"]) and hasattr(row, "full_pos"):
-                # the decode happened to cover every block → this IS the
-                # full positions stream; memoize for later queries on
-                # shared rows (free — nothing extra was decoded)
-                row.full_pos = (d_all, t_all, flat, pb)
-        if len(d_all) == 0:
-            return (
-                np.empty(0, dtype=np.int64),
-                np.zeros(len(wanted), dtype=np.int64),
-            )
-        idx = np.searchsorted(d_all, wanted)
-        idx_c = np.clip(idx, 0, len(d_all) - 1)
-        found = d_all[idx_c] == wanted
-        lens = np.where(found, pb[idx_c + 1] - pb[idx_c], 0)
-        return self._gather_runs(flat, pb[idx_c], lens), lens
-
-    def _full_positions(self, row):
-        """Whole-cell positions decode for the hot tier: (docids, tfs,
-        flat positions, per-posting bounds) — computed once per row ever,
-        then every phrase query slices (the positions analog of
-        CellRow.full)."""
-        meta = self._meta(row)
-        nb = len(meta["n"])
-        full = getattr(row, "full", None)
-        if full is None:
-            full = decode_cell(
-                bytes(row.postings), meta, codec=self.plan.codec
-            )
-            if hasattr(row, "full"):
-                row.full = full
-        d_all, t_all, _ = full
-        bounds = np.concatenate(
-            [[0], np.cumsum(np.asarray(meta["n"], dtype=np.int64))]
-        )
-        block_tfs = {
-            j: t_all[bounds[j] : bounds[j + 1]] for j in range(nb)
-        }
-        pos_by_block = decode_positions(
-            bytes(row.positions), list(row.pos_off), meta, block_tfs,
-            codec=self.plan.codec,
-        )
-        flat = (
-            np.concatenate([pos_by_block[j] for j in range(nb)])
-            if nb
-            else np.empty(0, dtype=np.int64)
-        )
-        pb = np.concatenate([[0], np.cumsum(t_all)])
-        return d_all, t_all, flat, pb
-
     @staticmethod
     def _phrase_freqs(slot_flats, slot_lens, nd, offsets, slop,
                       weight="count"):
@@ -1293,7 +1127,10 @@ class ShardEval:
         dfs = [dfm.get((field, t)) for t in node.terms]
         if any(d is None for d in dfs) or min(dfs) < PRUNE_MIN_POSTINGS:
             return None  # intersection ≤ min df: exact eval is cheap
-        idf = sum(p.idf.get((field, t), 0.0) for t in set(node.terms))
+        # summed in term order, like _eval_phrase (scores must match it)
+        idf = sum(
+            p.idf.get((field, t), 0.0) for t in sorted(set(node.terms))
+        )
         if self.normalize:
             idf = idf * idf
         scale = idf * node.boost
@@ -1374,11 +1211,7 @@ class ShardEval:
             wdocs = docs[sel]
             slot_flats, slot_lens = [], []
             for i in range(len(node.terms)):
-                f, ln = (
-                    self._positions_flat(field, node.terms[i], wdocs)
-                    if self.plan.hot
-                    else self._positions_flat_handles(wdocs, handles[i])
-                )
+                f, ln = self._positions_flat_handles(wdocs, handles[i])
                 slot_flats.append(f)
                 slot_lens.append(np.asarray(ln, dtype=np.int64))
             freqs = self._phrase_freqs(
@@ -1468,24 +1301,14 @@ class ShardEval:
         nd = len(docs)
         for i in range(len(alts)):
             if len(alts[i]) == 1:
-                # hot tier: route through the cross-query full_pos memo;
-                # cold tiers: reuse this query's decode handles (doc
-                # streams decode exactly once per phrase)
-                f, ln = (
-                    self._positions_flat(field, alts[i][0], docs)
-                    if self.plan.hot
-                    else self._positions_flat_handles(docs, slot_handles[i])
-                )
+                # reuse this query's decode handles (doc streams decode
+                # exactly once per phrase)
+                f, ln = self._positions_flat_handles(docs, slot_handles[i])
             else:
                 # sorted-unique union of the slot's alternatives: one
-                # lexsort + dedupe over all docs (hot tier routes through
-                # the cross-query memo; cold tiers reuse step 1's handles)
+                # lexsort + dedupe over all docs (reusing step 1's handles)
                 fs = [
-                    self._positions_flat(field, t, docs)
-                    if self.plan.hot
-                    else self._positions_flat_handles(
-                        docs, alt_handles[i][t]
-                    )
+                    self._positions_flat_handles(docs, alt_handles[i][t])
                     for t in alts[i]
                 ]
                 flat = np.concatenate([x[0] for x in fs])
@@ -1509,9 +1332,11 @@ class ShardEval:
         docs = docs[keep]
         freqs = freqs[keep]
         # 3. BM25 with tf = phrase freq, idf = Σ constituent idfs
-        # (idf-phrase analog: tc-similarity.lisp:36-38)
+        # (idf-phrase analog: tc-similarity.lisp:36-38), summed in term
+        # order: set order follows the per-process string hash seed, and
+        # the driver and the Spark workers must add the floats alike
         p = self.plan
-        all_terms = {t for slot in alts for t in slot}
+        all_terms = sorted({t for slot in alts for t in slot})
         idf = sum(p.idf.get((field, t), 0.0) for t in all_terms)
         if self.normalize:
             idf = idf * idf
@@ -1586,16 +1411,11 @@ class ShardEval:
         exhaustive eval and the docid-order early-exit rounds. Flat
         (doc-index·M + position) composite keys per unique term;
         per-doc independence makes subset evaluation exact."""
-        field = node.field
         nd = len(docs)
         M = np.int64(1) << np.int64(33)
         keys: dict[str, np.ndarray] = {}
         for term in mult:
-            f, ln = (
-                self._positions_flat(field, term, docs)
-                if self.plan.hot
-                else self._positions_flat_handles(docs, term_handles[term])
-            )
+            f, ln = self._positions_flat_handles(docs, term_handles[term])
             di = np.repeat(np.arange(nd, dtype=np.int64), ln)
             k = di * M + f
             if node.first is not None:
@@ -1887,7 +1707,7 @@ def explain_doc(plan: CompiledPlan, rows, docid: int,
                 if isinstance(n, MultiPhraseQuery)
                 else tuple((t,) for t in n.terms)
             )
-            terms = {t for slot in alts for t in slot}
+            terms = sorted({t for slot in alts for t in slot})
             idf = sum(ev.plan.idf.get((n.field, t), 0.0) for t in terms)
             return {
                 "type": "phrase",
@@ -2090,8 +1910,8 @@ def eval_local(plan: CompiledPlan, postings) -> pd.DataFrame:
     like make_kernel_partition, and WAND pruning sees the GLOBAL top-k
     threshold instead of 31 per-shard ones (strictly tighter).
     ``postings``: a pandas frame OR a pre-parsed list[CellRow] (the
-    preload tier caches parsed rows so repeated queries skip pandas
-    entirely)."""
+    Searcher's cell cache keeps parsed rows so repeated queries skip
+    pandas entirely)."""
     rows = (
         postings
         if isinstance(postings, list)

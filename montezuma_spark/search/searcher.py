@@ -13,9 +13,7 @@ Query lifecycle (the Spark-first re-expression of SURVEY.md §3):
    (field, term) range-sorted parquet layout makes these scans prune files
    via min/max statistics — the .tii two-level index analog
    (src/index/term-infos-io.lisp:135-148,219-232). Resolved (term, df)
-   entries are memoized driver-side (bounded caches) for repeated queries;
-   only ``preload=True`` (the hot-serving tier for small index slices)
-   collects the whole dictionary, guarded by ``preload_max_bytes``.
+   entries are memoized driver-side (bounded caches) for repeated queries.
 3. The needed (field, term) set is pushed as an ``isin`` predicate into the
    postings scan (broadcast of query terms); the positions column is only
    read when a phrase needs it (column pruning).
@@ -149,18 +147,13 @@ def _wildcard_java_regex(py_regex: str) -> str:
 
 class Searcher:
     def __init__(self, index: Index, max_expansion: int = 10_000,
-                 preload: bool = False, distributed: bool = False,
-                 preload_max_bytes: int = 1 << 30,
+                 distributed: bool = False,
                  similarity=None, cell_cache_bytes: int = 256 << 20):
-        """``preload=True`` caches the full dictionary AND all postings
-        cells driver-side so repeated queries skip Spark entirely — the
-        serving tier for small or hot index slices, guarded by
-        ``preload_max_bytes`` (the collect refuses above it rather than
-        OOM-ing the driver). The default path never collects the
-        vocabulary: dictionary resolution is per-query predicate pushdown
-        into the term_stats scan. ``distributed=True`` disables the
-        driver-local fast path entirely (every query runs the per-shard
-        kernel as a Spark job).
+        """The Searcher never collects the vocabulary: dictionary
+        resolution is a per-query seek (or predicate pushdown into the
+        term_stats scan). Small matched sets are evaluated driver-side;
+        ``distributed=True`` disables that fast path entirely (every query
+        runs the per-shard kernel as a Spark job).
 
         ``cell_cache_bytes`` bounds the per-(field, term) LRU of parsed
         postings cells on the saved-layout local tier (the Lucene
@@ -178,16 +171,10 @@ class Searcher:
             similarity if similarity is not None else index.config.similarity,
             index.config.k1, index.config.b,
         )
-        self._dict_cache: dict | None = None     # full dict: preload only
-        self._sorted_terms: dict | None = None   # per-field vocab: preload only
         self._df_cache: dict = {}                # (field, term) -> df memo
         self._exp_cache: dict = {}               # range/wildcard -> ((t, df),)
         self._exp_cache_terms = 0                # total tuples held (bound)
-        self._hot: dict | None = None
-        self._hot_parsed: dict = {}             # (field, term) -> [CellRow]
         self._tomb_df = None                     # tombstone table (big sets)
-        self._preload = preload
-        self._preload_max_bytes = preload_max_bytes
         self._force_distributed = distributed
         self._arrow_fetches = 0                  # driver-direct reads (tests)
         # ((field|None, term), need_pos) -> (rows, bytes); None field =
@@ -199,58 +186,7 @@ class Searcher:
         self._cell_cache_max = int(cell_cache_bytes)
         self._cell_cache_lock = threading.Lock()
 
-    def _hot_cells(self) -> dict:
-        if self._hot is None:
-            sz_row = self.index.postings.agg(
-                (
-                    F.sum(F.length("postings")) + F.sum(F.length("positions"))
-                ).alias("b")
-            ).collect()[0]
-            sz = int(sz_row["b"] or 0)
-            if sz > self._preload_max_bytes:
-                raise ValueError(
-                    f"preload refused: postings cells ≈{sz} bytes exceed "
-                    f"preload_max_bytes={self._preload_max_bytes}; use the "
-                    "distributed path (preload=False) for an index this size"
-                )
-            pdf = self.index.postings.toPandas()
-            self._hot = {
-                k: g for k, g in pdf.groupby(["field", "term"], sort=False)
-            }
-        return self._hot
-
-    def _hot_rows(self, key) -> list:
-        """Parsed CellRow list for one hot (field, term) — parsed ONCE and
-        memoized: repeated queries pay zero pandas row-accessor cost
-        (which profiled at ~74% of hot-serving latency)."""
-        rows = self._hot_parsed.get(key)
-        if rows is None:
-            from montezuma_spark.search.kernel import rows_from_pandas
-
-            rows = rows_from_pandas(self._hot_cells()[key])
-            self._hot_parsed[key] = rows
-        return rows
-
     # ------------------------------------------------------------- dictionary
-    def _dictionary(self) -> dict:
-        """Full-dictionary collect — PRELOAD SERVING TIER ONLY (small/hot
-        index slices). The default query path never calls this."""
-        if self._dict_cache is None:
-            rows = self.index.term_stats.collect()
-            self._dict_cache = {
-                (r["field"], r["term"]): int(r["df"]) for r in rows
-            }
-        return self._dict_cache
-
-    def _terms_sorted(self, field: str) -> list:
-        """Sorted term list per field — preload tier's in-memory .tii."""
-        if self._sorted_terms is None:
-            by_field: dict[str, list] = {}
-            for (f, t) in self._dictionary():
-                by_field.setdefault(f, []).append(t)
-            self._sorted_terms = {f: sorted(ts) for f, ts in by_field.items()}
-        return self._sorted_terms.get(field, [])
-
     def _lookup_dfs(self, pairs) -> dict:
         """df for exact (field, term) pairs — ONE seek for all cache misses
         (term-infos-io.lisp:219-232 analog): a footer-pruned point read on
@@ -258,9 +194,6 @@ class Searcher:
         ``isin``-filtered collect otherwise; absent terms resolve to
         df=0."""
         pairs = set(pairs)
-        if self._preload:
-            d = self._dictionary()
-            return {p: d.get(p, 0) for p in pairs}
         out = {}
         missing = [p for p in pairs if p not in self._df_cache]
         for p in pairs - set(missing):
@@ -322,54 +255,27 @@ class Searcher:
                node.include_lower, node.include_upper, self.max_expansion)
         if key in self._exp_cache:
             return self._exp_cache[key]
-        if self._preload:
-            out = self._expand_range_local(node)
-        else:
-            ts = self.index.term_stats.filter(F.col("field") == node.field)
-            if node.lower is not None:
-                ts = ts.filter(
-                    F.col("term") >= node.lower
-                    if node.include_lower
-                    else F.col("term") > node.lower
-                )
-            if node.upper is not None:
-                ts = ts.filter(
-                    F.col("term") <= node.upper
-                    if node.include_upper
-                    else F.col("term") < node.upper
-                )
-            rows = (
-                ts.select("term", "df")
-                .orderBy("term")
-                .limit(self.max_expansion)
-                .collect()
+        ts = self.index.term_stats.filter(F.col("field") == node.field)
+        if node.lower is not None:
+            ts = ts.filter(
+                F.col("term") >= node.lower
+                if node.include_lower
+                else F.col("term") > node.lower
             )
-            out = tuple((r["term"], int(r["df"])) for r in rows)
+        if node.upper is not None:
+            ts = ts.filter(
+                F.col("term") <= node.upper
+                if node.include_upper
+                else F.col("term") < node.upper
+            )
+        rows = (
+            ts.select("term", "df")
+            .orderBy("term")
+            .limit(self.max_expansion)
+            .collect()
+        )
+        out = tuple((r["term"], int(r["df"])) for r in rows)
         return self._exp_cache_put(key, out)
-
-    def _expand_range_local(self, node: RangeQuery) -> tuple:
-        import bisect
-
-        ts = self._terms_sorted(node.field)
-        lo = (
-            bisect.bisect_left(ts, node.lower)
-            if node.lower is not None and node.include_lower
-            else bisect.bisect_right(ts, node.lower)
-            if node.lower is not None
-            else 0
-        )
-        hi = (
-            bisect.bisect_right(ts, node.upper)
-            if node.upper is not None and node.include_upper
-            else bisect.bisect_left(ts, node.upper)
-            if node.upper is not None
-            else len(ts)
-        )
-        d = self._dictionary()
-        return tuple(
-            (t, d.get((node.field, t), 0))
-            for t in ts[lo:hi][: self.max_expansion]
-        )
 
     def _pattern_scan(self, field: str, prefix: str,
                       java_regex: str) -> tuple:
@@ -391,31 +297,6 @@ class Searcher:
         )
         return tuple((r["term"], int(r["df"])) for r in rows)
 
-    def _pattern_scan_local(self, field: str, prefix: str,
-                            match_fn) -> tuple:
-        """Preload-tier twin of ``_pattern_scan``: bisect the sorted
-        vocab to the prefix range, filter by ``match_fn``."""
-        import bisect
-
-        ts = self._terms_sorted(field)
-        if prefix:
-            lo = bisect.bisect_left(ts, prefix)
-            if ord(prefix[-1]) == 0x10FFFF:  # no successor code point
-                hi = len(ts)
-            else:
-                hi = bisect.bisect_left(
-                    ts, prefix[:-1] + chr(ord(prefix[-1]) + 1)
-                )
-        else:
-            lo, hi = 0, len(ts)
-        d = self._dictionary()
-        return tuple(
-            (t, d.get((field, t), 0))
-            for t in [t for t in ts[lo:hi] if match_fn(t)][
-                : self.max_expansion
-            ]
-        )
-
     def _expand_wildcard(self, node: WildcardQuery) -> tuple:
         """Concrete (term, df) list for a wildcard — constant-prefix
         ``startswith`` + anchored ``rlike`` pushed into the term_stats scan
@@ -424,20 +305,11 @@ class Searcher:
         key = ("wild", node.field, node.pattern, self.max_expansion)
         if key in self._exp_cache:
             return self._exp_cache[key]
-        if self._preload:
-            import re as _re
-
-            out = self._pattern_scan_local(
-                node.field, node.literal_prefix(),
-                _re.compile(node.to_regex()).match,
-            )
-        else:
-            out = self._pattern_scan(
-                node.field, node.literal_prefix(),
-                _wildcard_java_regex(node.to_regex()),
-            )
+        out = self._pattern_scan(
+            node.field, node.literal_prefix(),
+            _wildcard_java_regex(node.to_regex()),
+        )
         return self._exp_cache_put(key, out)
-
 
     def _expand_regexp(self, node) -> tuple:
         """Concrete (term, df) list for an anchored regex — the same
@@ -447,41 +319,11 @@ class Searcher:
         key = ("regexp", node.field, node.pattern, self.max_expansion)
         if key in self._exp_cache:
             return self._exp_cache[key]
-        if self._preload:
-            import re as _re
-
-            out = self._pattern_scan_local(
-                node.field, node.literal_prefix(),
-                _re.compile(node.pattern).fullmatch,
-            )
-        else:
-            out = self._pattern_scan(
-                node.field, node.literal_prefix(),
-                "^(?:" + node.pattern + ")\\z",
-            )
+        out = self._pattern_scan(
+            node.field, node.literal_prefix(),
+            "^(?:" + node.pattern + ")\\z",
+        )
         return self._exp_cache_put(key, out)
-
-    @staticmethod
-    def _levenshtein(a: str, b: str) -> int:
-        """Plain DP edit distance (driver-side, short dictionary terms —
-        the distributed path computes it JVM-side via F.levenshtein)."""
-        if a == b:
-            return 0
-        if not a or not b:
-            return len(a) + len(b)
-        prev = list(range(len(b) + 1))
-        for i, ca in enumerate(a, 1):
-            cur = [i]
-            for j, cb in enumerate(b, 1):
-                cur.append(min(prev[j] + 1, cur[j - 1] + 1,
-                               prev[j - 1] + (ca != cb)))
-            prev = cur
-        return prev[-1]
-
-    @staticmethod
-    def _fuzzy_sim(q: str, t: str, dist: int) -> float:
-        m = min(len(q), len(t))
-        return 1.0 - dist / m if m else 0.0
 
     def _expand_fuzzy(self, node: FuzzyQuery) -> tuple:
         """Concrete (term, df, sim) list for a fuzzy term. Pushdown scan:
@@ -495,18 +337,15 @@ class Searcher:
                self.max_expansion)
         if key in self._exp_cache:
             return self._exp_cache[key]
-        if self._preload:
-            out = self._expand_fuzzy_local(node)
-        else:
-            # truncation keeps the BEST terms (sim desc, term asc) — a
-            # lexicographic limit could drop the nearest spellings at web
-            # vocabularies (Lucene's priority-queue semantics)
-            rows = self._fuzzy_scan(node, [F.desc("_sim"), F.asc("term")],
-                                    self.max_expansion)
-            out = tuple(
-                sorted((r["term"], int(r["df"]), float(r["_sim"]))
-                       for r in rows)
-            )
+        # truncation keeps the BEST terms (sim desc, term asc) — a
+        # lexicographic limit could drop the nearest spellings at web
+        # vocabularies (Lucene's priority-queue semantics)
+        rows = self._fuzzy_scan(node, [F.desc("_sim"), F.asc("term")],
+                                self.max_expansion)
+        out = tuple(
+            sorted((r["term"], int(r["df"]), float(r["_sim"]))
+                   for r in rows)
+        )
         return self._exp_cache_put(key, out)
 
     def _fuzzy_scan(self, node: FuzzyQuery, order, limit: int):
@@ -542,32 +381,6 @@ class Searcher:
             .limit(limit)
             .collect()
         )
-
-    def _fuzzy_candidates_local(self, node: FuzzyQuery) -> list:
-        """Preload-tier fuzzy candidates, UNTRUNCATED (term, df, sim)
-        — callers apply their own order+limit."""
-        q = node.term
-        ms = node.min_similarity
-        pl = node.prefix_length
-        d = self._dictionary()
-        out = []
-        for t in self._terms_sorted(node.field):
-            if pl > 0 and not t.startswith(q[:pl]):
-                continue
-            if abs(len(t) - len(q)) > (1.0 - ms) * max(len(t), len(q)):
-                continue
-            dist = self._levenshtein(q, t)
-            sim = self._fuzzy_sim(q, t, dist)
-            if sim >= ms:
-                out.append((t, d.get((node.field, t), 0), sim))
-        return out
-
-    def _expand_fuzzy_local(self, node: FuzzyQuery) -> tuple:
-        out = self._fuzzy_candidates_local(node)
-        # best-similarity-first truncation, then back to term order so the
-        # distributed and preload tiers return identical tuples
-        out.sort(key=lambda r: (-r[2], r[0]))
-        return tuple(sorted(out[: self.max_expansion]))
 
     @staticmethod
     def _exact_pairs(q: Query) -> tuple[set, bool]:
@@ -1076,25 +889,8 @@ class Searcher:
         )
         if est > limit:
             return None
-        if self._preload:
-            from montezuma_spark.codec.postings import BOOST_TERM
-
-            hot = self._hot_cells()
-            rows = []
-            for f, terms in needed.items():
-                for t in sorted(terms):
-                    if (f, t) in hot:
-                        rows.extend(self._hot_rows((f, t)))
-            if self.index.config.boost_col is not None:
-                for key in sorted(k for k in hot if k[1] == BOOST_TERM):
-                    rows.extend(self._hot_rows(key))
-            plan.hot = True  # enable decode-once row caches (shared rows)
-            return eval_local(plan, rows)
         rows = self._cached_rows(resolved, need_pos)
         if rows is not None:
-            # NOTE: plan.hot stays False — the pruned single-term path
-            # remains available; full-decode memos still attach to the
-            # shared rows whenever a full decode happens naturally
             return eval_local(plan, rows)
         return eval_local(plan, self._fetch_postings_pdf(resolved, need_pos))
 
@@ -1375,8 +1171,7 @@ class Searcher:
           query) is paid once for the whole batch.
         * Cell rows are parsed and decoded once per task and shared
           across every query's evaluation (make_kernel_multi) — hot
-          terms appearing in many queries decode once, the batch analog
-          of the preload tier's decode-once cache.
+          terms appearing in many queries decode once per task.
         * Each task emits at most k rows per query; the per-query global
           top-k is a window over ≤ tasks × |batch| × k rows, and the
           docid→key lookup broadcasts that result against doc_map —
@@ -1404,23 +1199,6 @@ class Searcher:
                 out = res if out is None else out.unionByName(res)
             return self._finish_batch(out, k)
         local_parts: list = []
-        if self._preload and not self._force_distributed:
-            # hot tier: every cell is parsed/decoded in driver memory —
-            # a per-query local eval (~1 ms each) beats any Spark job;
-            # queries the local tier refuses (MatchAll, oversized
-            # matches) stay in `items` for the distributed machinery
-            import pandas as pd
-
-            rest = []
-            for qid, q in items:
-                local = self._execute_local(q, k)
-                if local is None:
-                    rest.append((qid, q))
-                    continue
-                pdf = (local.iloc[:k] if k is not None else local).copy()
-                pdf.insert(0, "qid", qid)
-                local_parts.append(pdf)
-            items = rest
         # amortize dictionary resolution across the batch: ONE df seek for
         # every exact (field, term) in ANY query (warms _df_cache), then
         # compile concurrently — expansion queries (wildcard/range/fuzzy)
@@ -1431,10 +1209,10 @@ class Searcher:
         rewritten = [(qid, rewrite(q)) for qid, q in items]
         for _, q in rewritten:
             exact_all |= self._exact_pairs(q)[0]
-        if exact_all and not self._preload:
+        if exact_all:
             self._lookup_dfs(exact_all)
         compiled: list = []
-        if len(rewritten) > 1 and not self._preload:
+        if len(rewritten) > 1:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(min(8, len(rewritten))) as pool:
@@ -1601,29 +1379,14 @@ class Searcher:
         from montezuma_spark.search.kernel import explain_doc, rows_from_pandas
 
         plan, resolved, need_pos = self._compile(query, None)
-        needed = self._needed_terms(resolved)
-        if self._preload:
-            from montezuma_spark.codec.postings import BOOST_TERM
-
-            hot = self._hot_cells()
-            rows = []
-            for f, terms in needed.items():
-                for t in sorted(terms):
-                    if (f, t) in hot:
-                        rows.extend(self._hot_rows((f, t)))
-            if self.index.config.boost_col is not None:
-                for key in sorted(k for k in hot if k[1] == BOOST_TERM):
-                    rows.extend(self._hot_rows(key))
-            plan.hot = True
-        else:
-            postings, _ = self._filtered_postings(resolved, need_pos)
-            # the explained doc's contributions live entirely in its
-            # docid-range shard — restrict the collect so explaining a
-            # web-hot term never pulls its full posting list to the driver
-            shard = docid >> self.index.config.shard_bits
-            rows = rows_from_pandas(
-                postings.filter(F.col("shard") == shard).toPandas()
-            )
+        postings, _ = self._filtered_postings(resolved, need_pos)
+        # the explained doc's contributions live entirely in its
+        # docid-range shard — restrict the collect so explaining a
+        # web-hot term never pulls its full posting list to the driver
+        shard = docid >> self.index.config.shard_bits
+        rows = rows_from_pandas(
+            postings.filter(F.col("shard") == shard).toPandas()
+        )
         lens_pdf = None
         if self._has_matchall(resolved):
             lens_pdf = (
@@ -1763,14 +1526,6 @@ class Searcher:
         fuzzy expansion's (sim desc, term asc) boundary could at web
         vocabularies."""
         node = FuzzyQuery(field, term, min_similarity, prefix_length)
-        if self._preload:
-            cand = self._fuzzy_candidates_local(node)
-            cand.sort(key=lambda r: (-r[2], -r[1], r[0]))
-            return [
-                (t, int(df), float(sim))
-                for t, df, sim in cand
-                if t != term
-            ][:n]
         rows = self._fuzzy_scan(
             node,
             [F.desc("_sim"), F.desc("df"), F.asc("term")],
@@ -1790,27 +1545,6 @@ class Searcher:
         The predicate is a ``startswith`` pushdown into the range-sorted
         term_stats parquet (min/max file pruning — the .tii seek analog);
         only the k result rows reach the driver, never the vocabulary."""
-        if self._preload:
-            import bisect
-
-            ts = self._terms_sorted(field)
-            lo = bisect.bisect_left(ts, prefix)
-            if prefix and ord(prefix[-1]) != 0x10FFFF:
-                hi = bisect.bisect_left(
-                    ts, prefix[:-1] + chr(ord(prefix[-1]) + 1)
-                )
-            else:
-                # no successor code point: the range is unbounded above,
-                # so keep only true prefix matches (cold-tier parity)
-                hi = len(ts)
-            d = self._dictionary()
-            cand = [
-                (t, d.get((field, t), 0))
-                for t in ts[lo:hi]
-                if t.startswith(prefix)
-            ]
-            cand.sort(key=lambda r: (-r[1], r[0]))
-            return cand[:n]
         scan = self.index.term_stats.filter(F.col("field") == field)
         if prefix:
             scan = scan.filter(F.col("term").startswith(prefix))

@@ -85,23 +85,24 @@ def test_batch_matches_single_all_matches(searcher):
         assert set(_from_batch(rows, qid)) == set(_single(searcher, q, None)), qid
 
 
-def test_batch_hot_tier_matches_distributed(spark):
-    """A preloaded searcher answers the batch driver-side (per-query hot
-    eval, no Spark job for the kernel) with identical rows — including a
-    MatchAll the local tier refuses (routed to the distributed path)."""
+def test_batch_hot_tier_matches_distributed(spark, saved_copy):
+    """A searcher over a saved copy answers the batch driver-side through
+    the cell cache, cold and then hot (warm cache), with rows identical to
+    the distributed kernel's — including a MatchAll the local tier refuses
+    (routed to the distributed path)."""
     idx = build_index(spark, search_docs_df(spark), CFG)
-    hot = Searcher(idx, preload=True)
-    cold = Searcher(idx)
+    hot = Searcher(saved_copy(idx))
     batch = dict(BATCH)
     batch["q_all"] = MatchAllQuery()
-    got = hot.search_batch(batch, k=5).collect()
-    want = cold.search_batch(batch, k=5).collect()
+    want = Searcher(idx, distributed=True).search_batch(batch, k=5).collect()
     key = lambda r: (r["qid"], -r["score"], r["docid"])  # noqa: E731
-    assert [
-        (r["qid"], r["docid"], round(r["score"], 9)) for r in sorted(got, key=key)
-    ] == [
-        (r["qid"], r["docid"], round(r["score"], 9)) for r in sorted(want, key=key)
-    ]
+    for _ in ("cold", "warm"):
+        got = hot.search_batch(batch, k=5).collect()
+        assert [
+            (r["qid"], r["docid"], r["score"]) for r in sorted(got, key=key)
+        ] == [
+            (r["qid"], r["docid"], r["score"]) for r in sorted(want, key=key)
+        ]
 
 
 def test_batch_with_matchall_fallback(searcher):

@@ -4,7 +4,7 @@ tests/unit/index/th-doc.lisp:242-271). BM25 replaces the reference's
 tf-idf norm product (north star), so the parity surface is the boost
 SEMANTICS: score(doc) = unboosted_score(doc) × boost(doc), rankings
 reorder accordingly, and the multiplier survives save/load, the
-distributed path, the preload tier, WAND pruning, and expunge."""
+distributed path, the saved-layout tier, WAND pruning, and expunge."""
 
 import numpy as np
 import pytest
@@ -68,8 +68,9 @@ def test_boost_reorders_golden_ranking(spark, plain_and_boosted):
 
 
 def test_boost_all_paths_agree(spark, plain_and_boosted, tmp_path):
-    """Fast-path, distributed kernel, preload tier, and a save/load
-    round-trip all produce the identical boosted ranking."""
+    """Fast-path, distributed kernel, and a save/load round-trip (the
+    saved-layout cell-cache tier) all produce the identical boosted
+    ranking."""
     _, boosted = plain_and_boosted
     q = bool_query(
         (TermQuery("field", "word1"), SHOULD),
@@ -77,7 +78,6 @@ def test_boost_all_paths_agree(spark, plain_and_boosted, tmp_path):
     )
     want = Searcher(boosted).top_docs(q, k=6)
     assert Searcher(boosted, distributed=True).top_docs(q, k=6) == want
-    assert Searcher(boosted, preload=True).top_docs(q, k=6) == want
     d = str(tmp_path / "bix")
     loaded = boosted.save(d)
     assert Searcher(loaded).top_docs(q, k=6) == want
@@ -169,7 +169,7 @@ def test_boost_quantization_is_1024th_steps(spark):
     assert got[1] == pytest.approx(base * 1 / 1024)  # floor, never 0
 
 
-def test_wand_bound_with_all_demotion_boosts(spark):
+def test_wand_bound_with_all_demotion_boosts(spark, saved_copy):
     """max_boost clamp (round-2 advice): merging a demotion-boosted index
     (every boost < 1.0) with an unboosted one puts docs WITHOUT a boost
     entry (implicit 1.0) next to covered boosts all < 1 — WAND's upper
@@ -201,7 +201,7 @@ def test_wand_bound_with_all_demotion_boosts(spark):
         cfg_plain,
     )
     merged = demoted.add_indexes(plain)
-    s = Searcher(merged, preload=True)
+    s = Searcher(saved_copy(merged))
     q = bool_query(
         (TermQuery("text", "spark"), SHOULD),
         (TermQuery("text", "merge"), SHOULD),

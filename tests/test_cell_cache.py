@@ -9,8 +9,10 @@ from montezuma_spark.fixtures import search_docs_df
 from montezuma_spark.index import FieldConfig, Index, IndexConfig, build_index
 from montezuma_spark.search import (
     MUST,
+    MultiPhraseQuery,
     PhraseQuery,
     Searcher,
+    SpanNearQuery,
     TermQuery,
     bool_query,
 )
@@ -157,3 +159,82 @@ def test_cached_tier_takes_larger_terms_locally(saved, monkeypatch):
     s2 = Searcher(saved)
     assert s2._execute_local(q, 10) is None  # over both gates
     assert _rows(s2, q) == _rows(s, q)
+
+
+@pytest.fixture(scope="module")
+def multi_shard(spark, tmp_path_factory):
+    """Saved 96-doc index over 6 shards and 3 build partitions, so each
+    term spans several cells (shards straddling a partition edge hold two
+    cells) of several 4-posting blocks. Every doc contains "alpha beta",
+    so phrases anchored on it want every doc and decode every block."""
+    import random
+
+    rng = random.Random(7)
+    vocab = ["alpha", "beta", "gamma", "delta", "eps"]
+    rows = []
+    for i in range(96):
+        toks = [rng.choice(vocab) for _ in range(rng.randint(3, 12))]
+        at = rng.randint(0, len(toks))
+        toks[at:at] = ["alpha", "beta"]
+        rows.append((f"u://{i:03d}", " ".join(toks)))
+    cfg = IndexConfig(
+        fields=[FieldConfig("text", "text", "whitespace")],
+        key_col="url", shard_bits=4, block_size=4, num_partitions=3,
+    )
+    d = str(tmp_path_factory.mktemp("cellcache_shapes") / "ix")
+    docs = spark.createDataFrame(rows, "url string, text string")
+    build_index(spark, docs, cfg, index_dir=d)
+    return Index.load(spark, d)
+
+
+# (query, every doc wanted → the cold call memoizes full positions)
+SHAPES = {
+    "phrase_all_cells": (PhraseQuery.of("text", ["alpha", "beta"]), True),
+    "phrase_3": (PhraseQuery.of("text", ["alpha", "beta", "gamma"]), False),
+    "multi_phrase_one_alt": (
+        MultiPhraseQuery.of("text", ["alpha", ("beta", "gamma")]), True,
+    ),
+    "multi_phrase_several_alts": (
+        MultiPhraseQuery.of(
+            "text", [("alpha", "delta"), ("beta", "gamma"), "eps"], slop=1,
+        ),
+        False,
+    ),
+    "sloppy_phrase": (
+        PhraseQuery.of("text", ["alpha", "gamma"], slop=3), False,
+    ),
+    "span_near": (
+        SpanNearQuery.of("text", ["beta", "delta", "gamma"], slop=3), False,
+    ),
+    "span_near_ordered": (
+        SpanNearQuery.of("text", ["alpha", "eps"], slop=2, in_order=True),
+        False,
+    ),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(SHAPES))
+def test_positional_shapes_cold_warm_uncached_distributed(multi_shard, shape):
+    """The positional kernel paths on the cell-cache tier: cold, warm (the
+    second call reuses the cached CellRows and their full_pos memos),
+    uncached and distributed answers are bit-identical, docids and float
+    scores alike."""
+    from collections import Counter
+
+    q, memo = SHAPES[shape]
+    uncached = Searcher(multi_shard, cell_cache_bytes=0)
+    dist = Searcher(multi_shard, distributed=True)
+    for k in (5, None):
+        s = Searcher(multi_shard)
+        cold = s.top_docs(q, k=k)
+        assert cold, (shape, k)
+        rows = [r for ent in s._cell_cache.values() for r in ent[0]]
+        assert min(Counter(r.term for r in rows).values()) > 1  # multi-cell
+        if memo and k is None:
+            assert any(r.full_pos is not None for r in rows), shape
+        fetches = s._arrow_fetches
+        warm = s.top_docs(q, k=k)
+        assert s._arrow_fetches == fetches  # served from the cache
+        assert warm == cold, (shape, k)
+        assert uncached.top_docs(q, k=k) == cold, (shape, k)
+        assert dist.top_docs(q, k=k) == cold, (shape, k)

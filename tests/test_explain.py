@@ -48,9 +48,9 @@ QUERIES = [
 ]
 
 
-@pytest.mark.parametrize("tier", ["pushdown", "preload"])
-def test_explain_value_equals_served_score(spark, corpus, tier):
-    s = Searcher(corpus, preload=(tier == "preload"))
+@pytest.mark.parametrize("tier", ["pushdown", "saved"])
+def test_explain_value_equals_served_score(spark, corpus, saved_copy, tier):
+    s = Searcher(saved_copy(corpus) if tier == "saved" else corpus)
     for q in QUERIES:
         hits = s.top_docs(q, k=None)
         assert hits, q

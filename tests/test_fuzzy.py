@@ -33,7 +33,7 @@ def corpus(spark):
     return idx, o
 
 
-def test_fuzzy_expansion_terms(spark, corpus):
+def test_fuzzy_expansion_terms(spark, corpus, saved_copy):
     """word1 at min_sim 0.7: word1 (sim 1), word2/word3 (lev 1, len 5 →
     sim 0.8); nothing else in the 18-doc vocabulary qualifies."""
     idx, _ = corpus
@@ -43,14 +43,14 @@ def test_fuzzy_expansion_terms(spark, corpus):
     sims = {t: sim for t, _df, sim in exp}
     assert sims["word1"] == pytest.approx(1.0)
     assert sims["word2"] == pytest.approx(0.8)
-    # preload tier expands identically
-    hot = Searcher(idx, preload=True)
-    hot.top_docs(TermQuery("field", "word1"), k=1)  # trigger dict load
+    # the saved-layout tier expands identically
+    hot = Searcher(saved_copy(idx))
     assert hot._expand_fuzzy(FuzzyQuery("field", "word1", 0.7)) == exp
 
 
-def test_fuzzy_matches_oracle_both_tiers(spark, corpus):
+def test_fuzzy_matches_oracle_both_tiers(spark, corpus, saved_copy):
     idx, o = corpus
+    saved = saved_copy(idx)
     for q in (
         FuzzyQuery("field", "word1", 0.7),
         FuzzyQuery("field", "word2", 0.5),
@@ -59,7 +59,7 @@ def test_fuzzy_matches_oracle_both_tiers(spark, corpus):
         FuzzyQuery("field", "word1", 0.7, boost=2.0),
     ):
         want = o.top_k(q, k=30)
-        for s in (Searcher(idx), Searcher(idx, preload=True)):
+        for s in (Searcher(idx), Searcher(saved)):
             got = s.top_docs(q, k=30)
             assert [d for d, _ in got] == [d for d, _ in want], q
             for (d, sg), (_, sw) in zip(got, want):
@@ -145,12 +145,12 @@ def test_spell_correct_orders_by_similarity_then_df(spark, corpus):
     assert all(t != "word1" for t, _df, _s in got2) and got2
 
 
-def test_fuzzy_truncation_keeps_nearest_spellings(spark):
+def test_fuzzy_truncation_keeps_nearest_spellings(spark, saved_copy):
     """Adversarial truncation: MORE in-threshold terms than
     max_expansion, with the worse-similarity terms lexicographically
     FIRST — a lexicographic limit would keep exactly the wrong ones.
     Locks the round-4 fix: truncation orders by (sim desc, term asc)
-    on both the distributed and preload tiers."""
+    on both the in-memory and saved-layout tiers."""
     worse = ["aadd", "abdd", "acdd", "aedd", "afdd"]   # lev 2 -> sim 0.5
     better = ["addd", "bddd", "cddd"]                  # lev 1 -> sim 0.75
     rows = [(f"u://{i:02d}", t)
@@ -163,9 +163,8 @@ def test_fuzzy_truncation_keeps_nearest_spellings(spark):
     idx = build_index(spark, docs, cfg)
     q = FuzzyQuery("field", "dddd", 0.45)  # all 9 terms in-threshold
     expansions = []
-    for s in (Searcher(idx), Searcher(idx, preload=True)):
+    for s in (Searcher(idx), Searcher(saved_copy(idx))):
         s.max_expansion = 4
-        s.top_docs(TermQuery("field", "dddd"), k=1)  # preload dict warm
         exp = s._expand_fuzzy(q)
         assert [t for t, _df, _s in exp] == sorted(better + ["dddd"])
         assert {round(sim, 9) for _t, _df, sim in exp} == {1.0, 0.75}

@@ -242,6 +242,23 @@ def test_save_load_roundtrip(spark, tmp_path):
     assert idx2.build_report["segment_docs"] == 18
 
 
+def test_unpersist_releases_build_frames(spark):
+    """Index.unpersist drops exactly the frames build_index persisted, and
+    the index still answers from lineage afterwards."""
+    from montezuma_spark.search import Searcher, TermQuery
+
+    idx = build_index(spark, search_docs_df(spark), SEARCH_CFG)
+    want = Searcher(idx).top_docs(TermQuery("field", "word2"), k=3)
+    def persisted(df):
+        return df.storageLevel.useMemory or df.storageLevel.useDisk
+
+    frames = idx._build_cache
+    assert len(frames) == 2 and all(persisted(df) for df in frames)
+    idx.unpersist()
+    assert not any(persisted(df) for df in frames)
+    assert Searcher(idx).top_docs(TermQuery("field", "word2"), k=3) == want
+
+
 def test_checkpoint_resume(spark, tmp_path):
     docs = synth_web_pages_df(spark, 200)
     cfg = IndexConfig(

@@ -91,12 +91,12 @@ def test_msm_with_coord_enabled(corpus):
     assert [(d, pytest.approx(sc)) for d, sc in want] == got and got
 
 
-def test_tiers_agree(corpus):
+def test_tiers_agree(corpus, saved_copy):
     idx, _ = corpus
     q = _q(2)
     a = Searcher(idx).top_docs(q, k=None)
     b = Searcher(idx, distributed=True).top_docs(q, k=None)
-    c = Searcher(idx, preload=True).top_docs(q, k=None)
+    c = Searcher(saved_copy(idx)).top_docs(q, k=None)
     assert a == b == c and a
 
 

@@ -31,8 +31,9 @@ def corpus(spark):
     return idx, o
 
 
-def test_multi_phrase_matches_oracle_both_tiers(spark, corpus):
+def test_multi_phrase_matches_oracle_both_tiers(spark, corpus, saved_copy):
     idx, o = corpus
+    saved = saved_copy(idx)
     queries = [
         MultiPhraseQuery.of("field", ["word1", ("word2", "word3")]),
         MultiPhraseQuery.of("field", [("word1",), ("word2", "word3")], slop=1),
@@ -47,7 +48,7 @@ def test_multi_phrase_matches_oracle_both_tiers(spark, corpus):
     ]
     for q in queries:
         want = o.top_k(q, k=30)
-        for s in (Searcher(idx), Searcher(idx, preload=True)):
+        for s in (Searcher(idx), Searcher(saved)):
             got = s.top_docs(q, k=30)
             assert [d for d, _ in got] == [d for d, _ in want], q
             for (d, sg), (_, sw) in zip(got, want):

@@ -4,8 +4,10 @@ oracle rank- and score-identically — the generative analog of the
 reference's M2K regression test (tests/unit/regression/tc-m2k.lisp:58-163),
 with the oracle replacing "doesn't crash" by "is exactly right".
 
-One index is built once (Spark jobs are slow); hypothesis drives QUERIES,
-which the preloaded searcher answers driver-side (no Spark job per example).
+One index is built and saved once (Spark jobs are slow); hypothesis drives
+QUERIES, which the default searcher over the saved copy answers driver-side
+through its cell cache (wildcard/range/fuzzy expansion still runs one Spark
+dictionary scan per distinct pattern).
 """
 
 import os
@@ -47,13 +49,13 @@ _X = int(os.environ.get("PROP_EXAMPLES", "1"))
 
 
 @pytest.fixture(scope="module")
-def engine(spark):
+def engine(spark, saved_copy):
     cfg = IndexConfig(
         fields=[FieldConfig("text", "text", "simple")], shard_bits=4,
         block_size=8,
     )
     idx = build_index(spark, synth_web_pages_df(spark, N_DOCS), cfg)
-    s = Searcher(idx, preload=True)
+    s = Searcher(saved_copy(idx))
     o = OracleIndex()
     pdf = synth_web_pages_pdf(N_DOCS).sort_values("url").reset_index(drop=True)
     for i, row in enumerate(pdf.itertuples(index=False)):
@@ -214,10 +216,10 @@ def test_random_query_doc_sets(engine, data):
 @given(data=st.data())
 def test_random_batch_matches_oracle(engine, data):
     """search_batch over random query trees (the distributed union-scan
-    kernel, NOT the preload tier) returns each query's exact oracle
+    kernel, NOT the driver-local tier) returns each query's exact oracle
     top-k — the generative analog of the batch parity suite."""
     s, o, vocab = engine
-    cold = Searcher(s.index)
+    cold = Searcher(s.index, distributed=True)
     qs = data.draw(
         st.lists(_full_strategy(vocab), min_size=2, max_size=4)
     )
@@ -327,7 +329,7 @@ def test_random_query_matches_oracle_expunged(engine_holes, data):
 
 
 @pytest.fixture(scope="module")
-def engine_r2(spark):
+def engine_r2(spark, saved_copy):
     """Round-2 scoring surface: index-time per-doc boosts + classic
     similarity + reciprocal sloppy weighting, vs the extended oracle."""
     from pyspark.sql import functions as F
@@ -341,7 +343,7 @@ def engine_r2(spark):
         (F.substring(F.col("url"), -1, 1).cast("int") % 5 + 1) / 2.0,
     )
     idx = build_index(spark, docs, cfg)
-    s = Searcher(idx, preload=True)
+    s = Searcher(saved_copy(idx))
     o = OracleIndex(similarity="classic")
     pdf = synth_web_pages_pdf(N_DOCS).sort_values("url").reset_index(drop=True)
     for i, row in enumerate(pdf.itertuples(index=False)):

@@ -76,7 +76,7 @@ def test_dictionary_wildcard_prefix_pushed(spark, saved, capsys):
 def test_queries_answer_without_full_dictionary_collect(spark, saved):
     """The default Searcher must never materialize the vocabulary on the
     driver: term, range and wildcard queries all answer through filtered
-    scans, and results match the preload (full-dict) serving tier."""
+    scans or point reads, and results match the distributed tier."""
     from montezuma_spark.search import (
         RangeQuery,
         Searcher,
@@ -85,7 +85,7 @@ def test_queries_answer_without_full_dictionary_collect(spark, saved):
     )
 
     s = Searcher(saved)
-    hot = Searcher(saved, preload=True)
+    dist = Searcher(saved, distributed=True)
     qs = [
         TermQuery("text", "merge"),
         RangeQuery("text", "key", "merge", True, True),
@@ -93,11 +93,11 @@ def test_queries_answer_without_full_dictionary_collect(spark, saved):
         WildcardQuery("text", "*rge"),  # no constant prefix
     ]
     for q in qs:
-        assert s.top_docs(q, k=10) == hot.top_docs(q, k=10), q
-        assert s.matching_docids(q) == hot.matching_docids(q), q
-    # pushdown path never built the driver-resident dictionary
-    assert s._dict_cache is None
-    assert s._sorted_terms is None
+        assert s.top_docs(q, k=10) == dist.top_docs(q, k=10), q
+        assert s.matching_docids(q) == dist.matching_docids(q), q
+    # the driver holds df only for the exact terms queried (expansions are
+    # resolved by filtered scans), never the vocabulary
+    assert set(s._df_cache) == {("text", "merge")}
     # absent terms resolve to df=0 without error
     assert s.top_docs(TermQuery("text", "zzzznotaterm"), k=10) == []
 
@@ -109,17 +109,7 @@ def test_wildcard_max_codepoint_prefix(spark, saved):
 
     q = WildcardQuery("text", "\U0010ffff*")
     assert Searcher(saved).matching_docids(q) == []
-    assert Searcher(saved, preload=True).matching_docids(q) == []
-
-
-def test_preload_size_guard(spark, saved):
-    """_hot_cells refuses to collect postings above preload_max_bytes
-    instead of OOM-ing the driver."""
-    from montezuma_spark.search import Searcher, TermQuery
-
-    s = Searcher(saved, preload=True, preload_max_bytes=16)
-    with pytest.raises(ValueError, match="preload refused"):
-        s.top_docs(TermQuery("text", "merge"), k=10)
+    assert Searcher(saved, distributed=True).matching_docids(q) == []
 
 
 def test_doc_map_broadcast_join_plan(spark, saved, capsys):

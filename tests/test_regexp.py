@@ -94,11 +94,11 @@ def test_equivalent_wildcard_same_results(corpus):
     assert rq == wq and len(rq) > 0
 
 
-def test_tiers_agree(corpus):
+def test_tiers_agree(corpus, saved_copy):
     idx, _ = corpus
     q = RegexpQuery("field", "word[123]")
     cold = Searcher(idx).top_docs(q, k=None)
-    hot = Searcher(idx, preload=True).top_docs(q, k=None)
+    hot = Searcher(saved_copy(idx)).top_docs(q, k=None)
     dist = Searcher(idx, distributed=True).top_docs(q, k=None)
     assert cold == hot == dist
     assert len(cold) > 0

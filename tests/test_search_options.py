@@ -1,5 +1,5 @@
 """Search options: FILTER clauses, sort-by-stored-field, stored fields,
-get_document, each_hit, preloaded (hot) searcher."""
+get_document, each_hit, searcher over a saved copy (cell-cache tier)."""
 
 import pytest
 
@@ -38,10 +38,8 @@ def searcher(spark):
 
 
 @pytest.fixture(scope="module")
-def hot_searcher(spark):
-    return Searcher(
-        build_index(spark, search_docs_df(spark), CFG), preload=True
-    )
+def hot_searcher(spark, saved_copy):
+    return Searcher(saved_copy(build_index(spark, search_docs_df(spark), CFG)))
 
 
 def test_filter_restricts_without_scoring(searcher):
@@ -168,7 +166,7 @@ def test_more_like_this(searcher):
         assert all(d != src for d, _ in got)
 
 
-def test_suggest_prefix_topn(searcher):
+def test_suggest_prefix_topn(searcher, hot_searcher):
     """Prefix autocomplete: (df desc, term asc) over dictionary pushdown;
     hot and cold tiers must agree."""
     from collections import Counter
@@ -181,8 +179,7 @@ def test_suggest_prefix_topn(searcher):
     expect = sorted(want.items(), key=lambda r: (-r[1], r[0]))
     got = searcher.suggest("field", "word", n=10)
     assert got == expect
-    hot = Searcher(searcher.index, preload=True)
-    assert hot.suggest("field", "word", n=10) == expect
+    assert hot_searcher.suggest("field", "word", n=10) == expect
     assert searcher.suggest("field", "zzz", n=3) == []
     assert searcher.suggest("field", "word", n=1) == expect[:1]
 

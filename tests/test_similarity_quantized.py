@@ -108,10 +108,10 @@ def idx(spark):
     return build_index(spark, search_docs_df(spark), CFG)
 
 
-def test_quantized_scores_end_to_end(spark, idx):
+def test_quantized_scores_end_to_end(spark, idx, saved_copy):
     """Served quantized scores == idf²·query_norm · sqrt(tf) · decoded
-    norm byte, recomputed from the index's own stats; distributed and
-    preload tiers agree bit-for-bit."""
+    norm byte, recomputed from the index's own stats; the in-memory and
+    saved-layout tiers agree bit-for-bit."""
     s = Searcher(idx, similarity="classic-quantized")
     hits = s.top_docs(TermQuery("field", "word2"), k=18)
     assert hits
@@ -130,7 +130,7 @@ def test_quantized_scores_end_to_end(spark, idx):
         norm = NORM_TABLE[float_to_byte315(1.0 / math.sqrt(len(toks)))]
         want = idf * idf * qn * math.sqrt(tf) * norm
         assert score == pytest.approx(want, rel=1e-9), docid
-    hot = Searcher(idx, similarity="classic-quantized", preload=True)
+    hot = Searcher(saved_copy(idx), similarity="classic-quantized")
     assert hot.top_docs(TermQuery("field", "word2"), k=18) == hits
 
 

@@ -41,8 +41,9 @@ def _matching(searcher, q):
     return sorted(int(d) for d in pdf["docid"])
 
 
-def test_span_near_matches_oracle_both_tiers(spark, corpus):
+def test_span_near_matches_oracle_both_tiers(spark, corpus, saved_copy):
     idx, o = corpus
+    saved = saved_copy(idx)
     queries = [
         SpanNearQuery.of("field", ["word1", "word2"], slop=0),
         SpanNearQuery.of("field", ["word1", "word2"], slop=2),
@@ -64,7 +65,7 @@ def test_span_near_matches_oracle_both_tiers(spark, corpus):
     ]
     for q in queries:
         want = o.matching(q)
-        for s in (Searcher(idx), Searcher(idx, preload=True)):
+        for s in (Searcher(idx), Searcher(saved)):
             assert _matching(s, q) == want, q
 
 
@@ -78,7 +79,7 @@ def test_span_constant_score_and_boost(spark, corpus):
     assert [d for d, _ in got] == sorted(d for d, _ in got)  # docid tiebreak
 
 
-def test_span_in_bool_tree(spark, corpus):
+def test_span_in_bool_tree(spark, corpus, saved_copy):
     """Span composes as a structural clause: MUST span restricts a scored
     term; scores equal the oracle's composition to 1e-9."""
     idx, o = corpus
@@ -88,7 +89,7 @@ def test_span_in_bool_tree(spark, corpus):
         (TermQuery("field", "word3"), SHOULD),
     )
     want = o.top_k(q, k=20)
-    for s in (Searcher(idx), Searcher(idx, preload=True)):
+    for s in (Searcher(idx), Searcher(saved_copy(idx))):
         got = s.top_docs(q, k=20)
         assert [d for d, _ in got] == [d for d, _ in want]
         for (d, sg), (_, sw) in zip(got, want):

@@ -1,8 +1,8 @@
 """1M-doc robustness run — the scripted form of BASELINE.md's prose claim
 (round-2 verdict item #8): build the inverted index over a deterministic
 1M-doc / ~80M-token synthetic corpus at local[N], then time hot-term and
-boolean queries through the DISTRIBUTED per-shard kernel (the preload tier
-is refused at this size by design). Emits one JSON line:
+boolean queries through the DISTRIBUTED per-shard kernel. Emits one JSON
+line:
 
     ROBUSTNESS_RESULT {"n_docs":..., "build_seconds":..., "docs_per_sec":...,
                        "bytes_per_posting":..., "q_hot_term":..., ...}
