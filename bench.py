@@ -612,6 +612,19 @@ def _remaining() -> float:
     return TOTAL_BUDGET - (time.time() - _T0)
 
 
+def _budget_gate(result: dict, key: str, env: str, need_s: float) -> bool:
+    """Whether the optional tail section ``key`` runs: off when ``env``
+    is set to anything but 1; when fewer than ``need_s`` budget seconds
+    remain it is skipped and ``result[key]`` records {"skipped": "budget"}
+    so the artifact says why the section is missing."""
+    if os.environ.get(env, "1") != "1":
+        return False
+    if _remaining() <= need_s:
+        result[key] = {"skipped": "budget"}
+        return False
+    return True
+
+
 def _compact(result: dict) -> dict:
     """≤2 KB digest of the full metrics: the driver records only the tail
     of stdout, and round 3's full JSON overran the tail window (parsed:
@@ -685,6 +698,9 @@ def _compact(result: dict) -> dict:
     po = result.get("pipeline_ops") or {}
     if po:
         out["pipeline_ops"] = po
+    for kk in ("robustness", "dedup_ann_scale", "store_10m"):
+        if "skipped" in (result.get(kk) or {}):
+            out[kk] = {"skipped": result[kk]["skipped"]}
     return out
 
 
@@ -1024,7 +1040,7 @@ def main():
     # 1M-doc robustness arm (BASELINE.md's claim, scripted — verdict #8):
     # optional tail — skipped when the total budget is nearly spent
     # (the arm takes ~3-5 min); BENCH_ROBUSTNESS=0 disables outright
-    if os.environ.get("BENCH_ROBUSTNESS", "1") == "1" and _remaining() > 360:
+    if _budget_gate(result, "robustness", "BENCH_ROBUSTNESS", 360):
         rb_load = [round(x, 2) for x in os.getloadavg()]
         rb_docs = int(os.environ.get("BENCH_ROBUSTNESS_DOCS", "1000000"))
         rb_runs = []
@@ -1058,7 +1074,7 @@ def main():
     # banding joins) + a 1M-vector AnnIndex build/probe; ~8-10 min, so
     # it runs LAST — a driver kill still emits everything above via the
     # SIGTERM partial handler. BENCH_DEDUP_ANN=0 disables.
-    if os.environ.get("BENCH_DEDUP_ANN", "1") == "1" and _remaining() > 540:
+    if _budget_gate(result, "dedup_ann_scale", "BENCH_DEDUP_ANN", 540):
         da = _dedup_ann_subprocess(
             int(os.environ.get("BENCH_DEDUP_DOCS", "1000000")),
             int(os.environ.get("BENCH_DEDUP_VECS", "1000000")),
@@ -1081,8 +1097,7 @@ def main():
     # independent (≈ the 1M probe, recall ≥ 0.99). ~10-15 min, strictly
     # last and budget-gated; the measured numbers also live in
     # BASELINE.md so a starved draw never erases the evidence.
-    if (os.environ.get("BENCH_STORE_10M", "1") == "1"
-            and _remaining() > 900):
+    if _budget_gate(result, "store_10m", "BENCH_STORE_10M", 900):
         s10 = _store_subprocess(
             int(os.environ.get("BENCH_STORE_10M_DOCS", "10000000")), CPUS
         )

@@ -99,7 +99,8 @@ class CompiledPlan:
 _EMPTY = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
 
 # below this many postings a single vectorized full decode beats the
-# pruned path's per-round python overhead (see _try_pruned_term)
+# per-round python overhead of the pruned term path and the span early
+# exit (see _try_pruned_term)
 PRUNE_MIN_POSTINGS = 1 << 16
 
 # marker field for tombstone rows riding the doc_lens cogroup: delete sets
@@ -566,11 +567,9 @@ class ShardEval:
     # -------------------------------------------------------- top-k pruning
     def eval_top(self, node: Query):
         """Entry point for per-shard top-k: uses the block-max pruned
-        disjunction path (or the bound-ordered phrase rounds) when the
-        plan shape allows, else exact eval."""
+        disjunction path (or the span-near docid-order early exit) when
+        the plan shape allows, else exact eval."""
         pruned = self._try_pruned_disjunction(node)
-        if pruned is None:
-            pruned = self._try_pruned_phrase(node)
         if pruned is None:
             pruned = self._try_early_span(node)
         docids, scores = pruned if pruned is not None else self.eval(node)
@@ -1053,9 +1052,9 @@ class ShardEval:
     def _phrase_freqs(slot_flats, slot_lens, nd, offsets, slop,
                       weight="count"):
         """Per-doc phrase frequency over flat doc-major slot positions —
-        the one freq kernel behind BOTH the exhaustive phrase eval and
-        the pruned top-k rounds. slop == 0: composite (doc, shifted
-        position) key intersection; slop > 0: the sloppy sweep."""
+        the freq kernel of the phrase eval. slop == 0: composite (doc,
+        shifted position) key intersection; slop > 0: the sloppy
+        sweep."""
         freqs = np.zeros(nd, dtype=np.float64)
         if slop == 0:
             # vectorized across ALL candidate docs: encode (doc, shifted
@@ -1086,167 +1085,6 @@ class ShardEval:
             [slot_flats[i] - offsets[i] for i in range(len(slot_flats))],
             slot_lens, slop, weight,
         )
-
-    def _try_pruned_phrase(self, node: Query):
-        """Root-level pruned top-k for plain (single-term-slot) phrase
-        queries — the positional analog of ``_try_pruned_term``. The
-        positions fetch + window sweep are the dominant phrase cost and
-        are O(intersection); for top-k only the docs whose score BOUND
-        can reach the k-th best matter. Per-doc bound (valid under the
-        Similarity monotone-tf_norm contract, with EXACT per-doc boosts):
-
-            phrase_freq ≤ min(slot tf)              (slop == 0)
-            phrase_freq ≤ Σ slot tf − (n_slots − 1) (sloppy sweep: one
-              retirement per step, the sweep stops at the first
-              exhausted list; reciprocal weight contributes ≤ 1/step)
-
-        so ub = idf·boost·doc_boost·tf_norm(bound_tf, dl). Docs evaluate
-        in descending-ub rounds with a DOUBLING budget, and the loop
-        stops when the next unseen doc's bound falls STRICTLY below the
-        running k-th-best score θ (the single-term stop rule: an equal
-        bound still evaluates, so the docid-asc tie-break survives).
-        Step-1 decode streams and handles are shared with the rounds —
-        no doc stream decodes twice. Returns None when the shape can't
-        prune (no k, multi-alternative slots, < 2 slots, tiny df,
-        non-positive scale)."""
-        k = self.plan.k
-        # k <= 0 (empty page) goes exhaustive: the round machinery's
-        # theta partition has no k-th element to select. MultiPhrase
-        # needs no exclusion arm — it is a SIBLING of PhraseQuery in
-        # the AST (ast.py:45,72), so the isinstance check rejects it.
-        if (
-            k is None
-            or k <= 0
-            or not isinstance(node, PhraseQuery)
-            or len(node.terms) < 2
-        ):
-            return None
-        p = self.plan
-        field = node.field
-        dfm = p.df_est
-        dfs = [dfm.get((field, t)) for t in node.terms]
-        if any(d is None for d in dfs) or min(dfs) < PRUNE_MIN_POSTINGS:
-            return None  # intersection ≤ min df: exact eval is cheap
-        # summed in term order, like _eval_phrase (scores must match it)
-        idf = sum(
-            p.idf.get((field, t), 0.0) for t in sorted(set(node.terms))
-        )
-        if self.normalize:
-            idf = idf * idf
-        scale = idf * node.boost
-        if scale <= 0.0:
-            return None  # a non-positive scale inverts the bound order
-        # step 1 (same as the exact path): intersect doc sets rarest
-        # first, keeping each slot's decode stream + handles
-        order1 = sorted(
-            range(len(node.terms)),
-            key=lambda i: dfm.get((field, node.terms[i]), 0),
-        )
-        docs = None
-        streams: dict[int, tuple] = {}
-        handles: dict[int, list] = {}
-        for i in order1:
-            d, tf, dl, handles[i] = self._decode_with_handles(
-                field, node.terms[i], docs
-            )
-            streams[i] = (d, tf, dl)
-            if docs is not None:
-                d, _ = self._restrict(
-                    d, np.zeros(len(d), dtype=np.float64), docs
-                )
-            docs = d
-            if len(docs) == 0:
-                return _EMPTY
-        nd = len(docs)
-        # dl per doc is slot-independent — align it from the first
-        # decoded slot (docs ⊆ every slot's doc set by construction)
-        d_0, _tf_0, dl_0 = streams[order1[0]]
-        dl = dl_0[np.searchsorted(d_0, docs)].astype(np.float64)
-        avgdl = max(p.stats.get(field, {}).get("avgdl", 1.0), 1e-9)
-        dboost = self._doc_boost(docs)
-        boost_arr = dboost if isinstance(dboost, np.ndarray) else None
-        # Round sizing balances two costs that both hurt: position
-        # decode is block-granular (a 4096-doc round scatters over ~2/3
-        # of all position blocks — nearly the exhaustive decode), while
-        # every extra round re-pays the per-cell handle walk (~300
-        # cells × ~50 µs per term at 1M docs). ~1k-doc rounds fill
-        # k=10 at the measured window-match rate in one or two rounds
-        # while touching ~20% of blocks; doubling bounds sparse cases.
-        need = max(k * 64, 1024)
-        if nd <= need:
-            # one round evaluates everything anyway — skip the bound
-            # math (incl. the per-slot tf alignment it feeds) and reuse
-            # step-1 handles (≡ the exhaustive eval; a None return here
-            # would re-decode every doc stream)
-            order = np.arange(nd, dtype=np.int64)
-            ub = None
-        else:
-            # per-slot tf aligned on the final intersection — consumed
-            # only by the bound
-            tfs = np.empty((len(node.terms), nd), dtype=np.int64)
-            for i in order1:
-                d_i, tf_i, _dl_i = streams[i]
-                tfs[i] = tf_i[np.searchsorted(d_i, docs)]
-            if node.slop == 0:
-                ub_tf = tfs.min(axis=0)
-            else:
-                ub_tf = tfs.sum(axis=0) - (len(node.terms) - 1)
-            # 1e-9 relative headroom: the exact score multiplies the
-            # same factors in a different association order (ulp safety)
-            ub = (
-                scale * dboost * self.sim.tf_norm(ub_tf, dl, avgdl)
-                * (1.0 + 1e-9)
-            )
-            order = np.argsort(-ub, kind="stable")
-        weight = getattr(node, "weight", "count")
-        d_parts: list = []
-        s_parts: list = []
-        n_found = 0
-        pos = 0
-        while pos < nd:
-            take = min(nd, pos + need)
-            sel = np.sort(order[pos:take])
-            pos = take
-            need *= 2
-            wdocs = docs[sel]
-            slot_flats, slot_lens = [], []
-            for i in range(len(node.terms)):
-                f, ln = self._positions_flat_handles(wdocs, handles[i])
-                slot_flats.append(f)
-                slot_lens.append(np.asarray(ln, dtype=np.int64))
-            freqs = self._phrase_freqs(
-                slot_flats, slot_lens, len(wdocs), node.offsets,
-                node.slop, weight,
-            )
-            keep = freqs > 0
-            if keep.any():
-                sc = (
-                    scale
-                    * (boost_arr[sel][keep] if boost_arr is not None
-                       else dboost)
-                    * self.sim.tf_norm(freqs[keep], dl[sel][keep], avgdl)
-                )
-                d_parts.append(wdocs[keep])
-                s_parts.append(sc)
-                n_found += int(keep.sum())
-            if pos >= nd:
-                break
-            if ub is not None and n_found >= k:
-                scores = np.concatenate(s_parts)
-                s_parts = [scores]
-                theta = np.partition(scores, len(scores) - k)[
-                    len(scores) - k
-                ]
-                if ub[order[pos]] < theta:
-                    break
-        docids = np.concatenate(d_parts) if d_parts else _EMPTY[0]
-        scores = (
-            np.concatenate(s_parts)
-            if s_parts
-            else np.empty(0, dtype=np.float64)
-        )
-        by_doc = np.argsort(docids)
-        return docids[by_doc], scores[by_doc]
 
     def _eval_phrase(self, node, candidates):
         """PhraseQuery or MultiPhraseQuery (per-slot alternatives): a slot

@@ -1,12 +1,12 @@
-"""Bound-ordered pruned phrase top-k (ShardEval._try_pruned_phrase)
-must be rank- AND score-identical to the exhaustive phrase eval — the
-positional analog of the block-max WAND contract (tests/test_wand.py).
-The pruned and exhaustive paths share the decode, positions, freq and
-scoring kernels with the same float association order, so equality is
-exact, not approximate."""
+"""Positional top-k: root phrase top-k (the exhaustive phrase eval)
+against the oracle and under deletes, and the span-near docid-order early
+exit (ShardEval._try_early_span), which must be rank- AND score-identical
+to the exhaustive span eval — the positional analog of the block-max WAND
+contract (tests/test_wand.py). The early exit and the exhaustive eval
+share _span_intersect and _span_hits, so equality is exact, not
+approximate."""
 
 import pytest
-from pyspark.sql import functions as F  # noqa: F401
 
 import montezuma_spark.search.kernel as kmod
 from montezuma_spark.fixtures import synth_web_pages_df
@@ -55,17 +55,6 @@ def _rows(s, q, k):
     return [(d, sc) for d, sc in s.top_docs(q, k=k)]
 
 
-def test_pruned_phrase_identical_to_exhaustive(spark, corpus, monkeypatch):
-    idx, _ = corpus
-    s = Searcher(idx)
-    pruned = [_rows(s, q, 7) for q in QUERIES]
-    with monkeypatch.context() as m:
-        m.setattr(ShardEval, "_try_pruned_phrase", lambda self, node: None)
-        exact = [_rows(Searcher(idx), q, 7) for q in QUERIES]
-    assert pruned == exact  # bit-identical (shared scoring kernels)
-    assert any(p for p in pruned)  # and not vacuous
-
-
 def test_pruned_phrase_matches_oracle(spark, corpus):
     idx, o = corpus
     s = Searcher(idx)
@@ -77,50 +66,22 @@ def test_pruned_phrase_matches_oracle(spark, corpus):
             assert sg == pytest.approx(sw, rel=1e-9), q
 
 
-def test_pruned_phrase_respects_deletes(spark, corpus, monkeypatch):
+def test_pruned_phrase_respects_deletes(spark, corpus):
     idx, _ = corpus
     q = PhraseQuery.of("text", ["spark", "index"], slop=4)
     top = [d for d, _ in Searcher(idx).top_docs(q, k=3)]
     try:
         idx.delete_docs(top[:2])
-        pruned = _rows(Searcher(idx), q, 7)
-        assert not set(top[:2]) & {d for d, _ in pruned}
-        with monkeypatch.context() as m:
-            m.setattr(
-                ShardEval, "_try_pruned_phrase", lambda self, node: None
-            )
-            exact = _rows(Searcher(idx), q, 7)
-        assert pruned == exact
+        got = _rows(Searcher(idx), q, 7)
+        assert got  # not vacuous
+        assert not set(top[:2]) & {d for d, _ in got}
     finally:
         idx.undelete_all()
 
 
-def test_pruned_phrase_with_doc_boosts(spark, monkeypatch):
-    """Per-doc index-time boosts enter the BOUND exactly (not via a max
-    factor), so boosted corpora stay rank-identical too."""
-    docs = synth_web_pages_df(spark, 200).withColumn(
-        "b", (F.crc32(F.col("url")) % 5 + 1).cast("double")
-    )
-    cfg = IndexConfig(
-        fields=[FieldConfig("text", "text", "whitespace")],
-        key_col="url", shard_bits=2, block_size=8, boost_col="b",
-    )
-    idx = build_index(spark, docs, cfg)
-    s = Searcher(idx)
-    for q in (PhraseQuery.of("text", ["spark", "index"]),
-              PhraseQuery.of("text", ["spark", "index"], slop=6)):
-        pruned = _rows(s, q, 5)
-        with monkeypatch.context() as m:
-            m.setattr(
-                ShardEval, "_try_pruned_phrase", lambda self, node: None
-            )
-            exact = _rows(Searcher(idx), q, 5)
-        assert pruned == exact and pruned
-
-
 def test_k_none_never_prunes(spark, corpus):
-    """matching-docs / k=None evaluation must stay exhaustive — the
-    pruned path only exists under a top-k plan."""
+    """matching-docs / k=None phrase evaluation returns every match, in
+    the oracle's order."""
     idx, o = corpus
     q = PhraseQuery.of("text", ["spark", "index"], slop=4)
     got = Searcher(idx).top_docs(q, k=None)
@@ -212,3 +173,72 @@ def test_early_span_negative_k_goes_exhaustive(spark, corpus):
         assert len(want[0]) > 0  # not vacuous
         assert got[0].tolist() == want[0].tolist()
         assert got[1].tolist() == want[1].tolist()
+
+
+def test_early_span_stops_before_last_chunk(spark, monkeypatch):
+    """The early exit across more than one docid chunk: a span
+    intersection larger than the first max(16k, 512)-doc chunk, where
+    in-order matches start only past that chunk. Every k and shape must
+    equal the exhaustive span eval, and the scan must stop before the
+    last chunk."""
+    from collections import Counter
+
+    from montezuma_spark.search import SpanNearQuery
+
+    fill = "x y z w v u t s"
+
+    def text(i):
+        # every doc holds both terms; only the listed residues seat a
+        # window within slop 1, and in order only from doc 600 on
+        pair = "alpha beta" if i >= 600 else "beta alpha"
+        m = i % 50
+        if m == 0:
+            return f"{pair} {fill}"
+        if m == 10:
+            return f"{fill} {pair}"
+        if m == 25:
+            return f"beta alpha {fill}"
+        return f"alpha {fill} beta"
+
+    n = 1600
+    docs = spark.createDataFrame(
+        [(f"u{i:05d}", text(i)) for i in range(n)], ["url", "text"]
+    )
+    cfg = IndexConfig(
+        fields=[FieldConfig("text", "text", "whitespace")],
+        key_col="url", shard_bits=2, block_size=8,
+    )
+    idx = build_index(spark, docs, cfg)
+    s = Searcher(idx)
+    qs = [
+        SpanNearQuery.of("text", ["alpha", "beta"], slop=1),
+        SpanNearQuery.of("text", ["alpha", "beta"], slop=1, in_order=True),
+        SpanNearQuery.of("text", ["alpha", "beta"], slop=1, first=4),
+    ]
+    plan, resolved, need_pos = s._compile(qs[0], 7)
+    ev = ShardEval(plan, s._fetch_postings_pdf(resolved, need_pos))
+    n_docs = len(ev._span_intersect(resolved, Counter(resolved.terms), None)[0])
+    assert n_docs == n > 512  # wider than the first chunk
+
+    span_hits = ShardEval._span_hits
+    chunks: list = []
+
+    def spy(self, node, docs, mult, term_handles):
+        chunks.append(len(docs))
+        return span_hits(self, node, docs, mult, term_handles)
+
+    most_chunks = 0
+    for k in (1, 3, 7):
+        for q in qs:
+            chunks.clear()
+            with monkeypatch.context() as m:
+                m.setattr(ShardEval, "_span_hits", spy)
+                early = _rows(Searcher(idx), q, k)
+            assert chunks and sum(chunks) < n_docs, (q, k, chunks)
+            most_chunks = max(most_chunks, len(chunks))
+            with monkeypatch.context() as m:
+                m.setattr(ShardEval, "_try_early_span",
+                          lambda self, node: None)
+                exact = _rows(Searcher(idx), q, k)
+            assert early == exact and len(early) == k, (q, k)
+    assert most_chunks >= 2  # the in-order scan ran past the first chunk

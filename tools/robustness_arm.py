@@ -64,9 +64,10 @@ def main():
     st = idx.stats["text"]
 
     # hottest term = highest df (the worst-case posting list)
-    hot = idx.term_stats.orderBy(F.desc("df")).limit(2).collect()
+    hot = idx.term_stats.orderBy(F.desc("df")).limit(3).collect()
     hot_term = hot[0]["term"]
     second = hot[1]["term"] if len(hot) > 1 else hot_term
+    third = hot[2]["term"] if len(hot) > 2 else second
 
     # SERVE FROM THE SAVED LAYOUT: a real deployment queries an index on
     # storage, where the size-gated local tier reads the matched cells
@@ -99,6 +100,11 @@ def main():
         # flat-decode dominate — the worst positional case)
         "q_hot_phrase": PhraseQuery.of(
             "text", [hot_term, second], slop=4
+        ),
+        # exact phrase over the three hottest terms: a three-way
+        # intersection of the biggest position lists
+        "q_hot_phrase3": PhraseQuery.of(
+            "text", [hot_term, second, third]
         ),
         "q_hot_span": SpanNearQuery.of(
             "text", [hot_term, second], slop=4
