@@ -14,6 +14,9 @@ segment of a streaming union) with file IO only, no Spark job:
 3. the kept groups are read with ``read_row_groups(use_threads=False)``;
 4. an exact ``field ==`` / ``term is_in`` mask selects the rows.
 
+``read_range`` is the same reader's dictionary range seek — a (field,
+[lo, hi], prefix) slice of ``term_stats`` for term expansion.
+
 A listed directory that is missing or holds no parquet file RAISES: a
 union opened before ``compact()``/``maybe_merge`` removed its segments must
 never serve a silently empty answer.
@@ -128,6 +131,59 @@ class SavedTable:
         if len(parts) == 1:
             return parts[0]
         return pa.concat_tables(parts, promote_options="permissive")
+
+    def read_range(self, field: str, lo: str | None = None,
+                   hi: str | None = None, prefix: str = ""):
+        """The dictionary range seek behind term expansion: yields, one
+        table per file with a kept row group, the ``field, term, df`` rows
+        of ``field`` with ``lo <= term <= hi`` (a None bound is open) and
+        ``term`` starting with ``prefix``. Yielding per file bounds what a
+        wide pattern holds on the driver to one file's pruned groups.
+
+        A union yields one row per segment holding the term (callers sum
+        df). The prefix never becomes an upper bound such as
+        ``prefix + "\\U0010ffff"`` — that would cut
+        ``prefix + "\\U0010ffff" + "x"``."""
+        cols = ["field", "term", "df"]
+        for path, md, bounds in self.footers():
+            groups = [
+                g for g, b in enumerate(bounds)
+                if _keep_range(b, field, lo, hi, prefix)
+            ]
+            if not groups:
+                continue
+            with pq.ParquetFile(path, metadata=md) as pf:
+                tbl = pf.read_row_groups(
+                    groups, columns=cols, use_threads=False
+                )
+            tcol = tbl.column("term")
+            m = pc.equal(tbl.column("field"), field)
+            if lo is not None:
+                m = pc.and_(m, pc.greater_equal(tcol, lo))
+            if hi is not None:
+                m = pc.and_(m, pc.less_equal(tcol, hi))
+            if prefix:
+                m = pc.and_(m, pc.starts_with(tcol, pattern=prefix))
+            yield tbl.filter(m)
+
+
+def _keep_range(bounds: tuple, field: str, lo, hi, prefix: str) -> bool:
+    """Row-group pruning for ``read_range``: the group's field range must
+    cover ``field`` and its term range must meet [lo, hi] and the terms
+    starting with ``prefix``. Every such term sorts at or after
+    ``prefix``, and before any ``tlo > prefix`` that does not itself start
+    with ``prefix``."""
+    flo, fhi, tlo, thi = bounds
+    if not _inside(field, flo, fhi):
+        return False
+    if tlo is None:
+        return True
+    if (lo is not None and thi < lo) or (hi is not None and tlo > hi):
+        return False
+    if prefix and (thi < prefix
+                   or (tlo > prefix and not tlo.startswith(prefix))):
+        return False
+    return True
 
 
 def _keep(bounds: tuple, wants: list, any_field_term) -> bool:

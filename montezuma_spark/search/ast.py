@@ -127,13 +127,20 @@ class RegexpQuery(Query):
     (the Lucene RegexpQuery analog; the reference's only multi-term
     enums are wildcard and range, wildcard-term-enum.lisp). The pattern
     must match the WHOLE term (anchoring is applied by the engine —
-    never write ``^``/``$`` yourself, Lucene semantics). Use the regex
-    subset Java, RE2 and Python agree on: literals, explicit character
-    classes (``[0-9]``), quantifiers, alternation, groups. AVOID the
-    shorthand classes ``\\d``/``\\w``/``\\s`` — they are Unicode-wide in
-    Python but ASCII-only in Java. Every engine tier expands through the
-    JVM ``rlike``, so only a Python ``re`` oracle could disagree with the
-    engine on non-ASCII vocabularies."""
+    never write ``^``/``$`` yourself, Lucene semantics).
+
+    Accepted subset: the regex syntax Java and Python ``re`` agree on —
+    literals, ``.``, character classes with ranges and negation
+    (``[0-9]``, ``[^a-z]``), the ASCII shorthand classes
+    ``\\d``/``\\w``/``\\s``, greedy and lazy quantifiers (``* + ? {m,n}``),
+    alternation and groups. A saved layout expands in the driver with
+    ``re.fullmatch`` under ``re.ASCII`` (so ``\\d``/``\\w``/``\\s`` match
+    ASCII only, as in Java); an unsaved index expands through the JVM
+    ``rlike``. A pattern Python cannot compile (Java's ``\\p{L}``
+    property classes, …) raises ValueError on a saved layout; Java syntax
+    Python compiles differently (``&&`` class intersections, possessive
+    quantifiers before 3.11, ``.`` against a line terminator other than
+    ``\\n``) is outside the subset."""
 
     field: str
     pattern: str
@@ -189,9 +196,12 @@ class FuzzyQuery(Query):
     terms with sim ≥ ``min_similarity`` (and sharing the first
     ``prefix_length`` chars) are OR'd, each boosted by
     ``(sim − min_sim) / (1 − min_sim)`` so nearer spellings outrank
-    distant ones. Expansion is a pushdown dictionary scan: length bounds
-    + prefix reach the parquet scan, the JVM ``levenshtein`` filters the
-    pruned slice — never a vocabulary collect."""
+    distant ones. Expansion never collects the vocabulary: on a saved
+    layout it is a driver-direct seek at the constant prefix with the
+    length bounds and a numpy Levenshtein applied in Python; on an
+    unsaved index the length bounds and prefix reach the parquet scan and
+    the JVM ``levenshtein`` filters the pruned slice. Both compute sim in
+    the same float64 arithmetic."""
 
     field: str
     term: str

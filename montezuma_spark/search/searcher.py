@@ -3,17 +3,22 @@
 Query lifecycle (the Spark-first re-expression of SURVEY.md §3):
 
 1. ``rewrite`` fixpoint on the AST (driver, pure Python).
-2. Dictionary resolution is PER-QUERY PUSHDOWN, never a full-vocabulary
+2. Dictionary resolution is a PER-QUERY SEEK, never a full-vocabulary
    collect (Heaps' law: a web corpus has O(10^9) terms — the dictionary
-   cannot live on the driver). Exact terms resolve via one batched
-   ``isin``-filtered collect over ``term_stats``; range predicates become
-   ``term >= lo AND term <= hi``; wildcards become a ``startswith`` prefix
-   predicate + anchored ``rlike``, with ``max_expansion`` applied as
-   ``ORDER BY term LIMIT n`` at scan time. On the saved index the
-   (field, term) range-sorted parquet layout makes these scans prune files
-   via min/max statistics — the .tii two-level index analog
-   (src/index/term-infos-io.lisp:135-148,219-232). Resolved (term, df)
-   entries are memoized driver-side (bounded caches) for repeated queries.
+   cannot live on the driver). On a saved layout (a loaded index or a
+   streaming union of saved segments) every dictionary touch reads the
+   (field, term) range-sorted ``term_stats`` parquet driver-direct through
+   ``index/pointread.SavedTable``, pruning row groups by footer min/max —
+   the .tii two-level index analog
+   (src/index/term-infos-io.lisp:135-148,219-232) — and starts no Spark
+   job: exact terms are a point read; range, wildcard, regexp, fuzzy,
+   ``suggest`` and ``spell_correct`` are a range/prefix seek with the
+   exact filter (``re.fullmatch``, a numpy Levenshtein) applied in Python
+   and ``max_expansion`` applied after the same order the scan uses. An
+   unsaved index pushes the same predicates into the ``term_stats`` scan
+   instead (``isin``, BETWEEN, ``startswith`` + anchored ``rlike``, the
+   JVM ``levenshtein``; ORDER BY + LIMIT at scan time). Resolved
+   (term, df) entries are memoized driver-side (bounded caches).
 3. The needed (field, term) set is pushed as an ``isin`` predicate into the
    postings scan (broadcast of query terms); the positions column is only
    read when a phrase needs it (column pruning).
@@ -28,6 +33,7 @@ from __future__ import annotations
 
 import math
 import re
+from itertools import repeat
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
@@ -135,7 +141,9 @@ def bm25_idf(df: int, n: int) -> float:
 
 
 def _wildcard_java_regex(py_regex: str) -> str:
-    """fnmatch.translate output -> fully-anchored Java regex for ``rlike``.
+    """End-anchored Python whole-term regex (``fnmatch.translate`` output,
+    or a regexp wrapped as ``(?:pat)\\Z``) -> fully-anchored Java regex for
+    ``rlike``.
 
     ``rlike`` is a *search* (substring match), so the pattern is anchored
     with ``^``; Python's absolute-end ``\\Z`` is spelled ``\\z`` in Java.
@@ -143,6 +151,60 @@ def _wildcard_java_regex(py_regex: str) -> str:
     if py_regex.endswith(r"\Z"):
         py_regex = py_regex[:-2] + r"\z"
     return "^" + py_regex
+
+
+def _levenshtein(q: str, terms: list) -> np.ndarray:
+    """Unit-cost edit distance from ``q`` to each of ``terms`` over code
+    points (the JVM ``levenshtein``'s definition), vectorized across the
+    terms: one numpy pass per character of ``q``. Within a DP row the
+    insertion chain D[j] = min(D[j], D[j-1] + 1) is a running minimum of
+    ``D[j] - j``. Terms are zero-padded to one width; the padding sits
+    right of each term's own last column, which never reads it."""
+    lens = np.fromiter(map(len, terms), np.int64, len(terms))
+    width = int(lens.max()) if len(terms) else 0
+    if width == 0:
+        return np.full(len(terms), len(q), np.int64)
+    cps = np.array(terms, dtype=f"<U{width}").view(np.uint32).reshape(
+        len(terms), width
+    )
+    j = np.arange(width + 1, dtype=np.int64)
+    row = np.tile(j, (len(terms), 1))  # D[0][j] = j
+    step = np.empty_like(row)
+    for i, c in enumerate(q, 1):
+        step[:, 0] = i
+        np.minimum(row[:, 1:] + 1, row[:, :-1] + (cps != ord(c)),
+                   out=step[:, 1:])
+        row = np.minimum.accumulate(step - j, axis=1) + j
+    return row[np.arange(len(terms)), lens]
+
+
+def _fuzzy_sims(q: str, terms: list) -> np.ndarray:
+    """sim = 1 − levenshtein/min(len(q), len(t)) per term, in float64 —
+    the same arithmetic as the JVM scan's ``1.0 - dist / least(L,
+    length(term)).cast(double)`` (terms must be non-empty, as the length
+    bounds guarantee)."""
+    lens = np.fromiter(map(len, terms), np.int64, len(terms))
+    mins = np.minimum(len(q), lens).astype(np.float64)
+    return 1.0 - _levenshtein(q, terms) / mins
+
+
+def _saved_slice(reader, field: str, lo=None, hi=None, prefix: str = "",
+                 keep=None) -> dict:
+    """{term: df} over one field's slice of the saved dictionary —
+    terms in [lo, hi] starting with ``prefix``, read driver-direct by
+    ``SavedTable.read_range`` (footer-pruned, no Spark job). ``keep``
+    (terms -> bool sequence) is the exact filter, applied file by file
+    before anything is retained. df SUMS over a union's segments, as
+    the groupBy of ``_union_index`` does on the Spark side."""
+    out: dict = {}
+    for tbl in reader.read_range(field, lo, hi, prefix):
+        terms = tbl.column("term").to_pylist()
+        dfs = tbl.column("df").to_pylist()
+        kept = keep(terms) if keep is not None else repeat(True)
+        for t, df, k in zip(terms, dfs, kept):
+            if k:
+                out[t] = out.get(t, 0) + df
+    return out
 
 
 class Searcher:
@@ -248,13 +310,24 @@ class Searcher:
         return out
 
     def _expand_range(self, node: RangeQuery) -> tuple:
-        """Concrete (term, df) list for a range — BETWEEN predicate pushed
-        into the term_stats scan, ``max_expansion`` applied as LIMIT at
-        scan time (never a vocabulary collect)."""
+        """Concrete (term, df) list for a range, (term asc) truncated to
+        ``max_expansion``: a range seek into the saved dictionary, or a
+        BETWEEN predicate pushed into the term_stats scan with the limit
+        applied at scan time (never a vocabulary collect)."""
         key = ("range", node.field, node.lower, node.upper,
                node.include_lower, node.include_upper, self.max_expansion)
         if key in self._exp_cache:
             return self._exp_cache[key]
+        reader = self.index._term_stats_dataset()
+        if reader is not None:
+            found = _saved_slice(reader, node.field, node.lower, node.upper)
+            if not node.include_lower:
+                found.pop(node.lower, None)
+            if not node.include_upper:
+                found.pop(node.upper, None)
+            out = tuple((t, found[t])
+                        for t in sorted(found)[: self.max_expansion])
+            return self._exp_cache_put(key, out)
         ts = self.index.term_stats.filter(F.col("field") == node.field)
         if node.lower is not None:
             ts = ts.filter(
@@ -277,18 +350,38 @@ class Searcher:
         out = tuple((r["term"], int(r["df"])) for r in rows)
         return self._exp_cache_put(key, out)
 
-    def _pattern_scan(self, field: str, prefix: str,
-                      java_regex: str) -> tuple:
-        """Shared pattern-enum pushdown (wildcard + regexp): constant
-        prefix ``startswith`` (prunes parquet files via min/max) +
-        anchored ``rlike`` into the term_stats scan, ``max_expansion``
-        as LIMIT at scan time — never a vocabulary collect. The regex
+    def _pattern_scan(self, field: str, prefix: str, regex: str) -> tuple:
+        """Shared pattern enum (wildcard + regexp): the (term, df) terms
+        of ``field`` that start with ``prefix`` and whole-match the Python
+        ``regex`` (end-anchored by ``\\Z``), (term asc) truncated to
+        ``max_expansion``.
+
+        On a saved layout: a prefix range seek into the dictionary, then
+        ``re.fullmatch`` under ``re.ASCII`` (``\\d``/``\\w``/``\\s`` stay
+        ASCII, as in Java). A pattern Python cannot compile raises
+        ValueError. Otherwise: ``startswith`` + the anchored Java form as
+        ``rlike`` into the term_stats scan, LIMIT at scan time. The regex
         rides ``Column.rlike`` as a py4j literal, NEVER an F.expr SQL
         string (the escape-stripping footgun, CLAUDE.md)."""
+        reader = self.index._term_stats_dataset()
+        if reader is not None:
+            try:
+                rx = re.compile(regex, re.ASCII)
+            except re.error as e:
+                raise ValueError(
+                    f"pattern {regex!r} is outside the regex subset "
+                    f"saved-layout expansion accepts: {e}"
+                ) from None
+            found = _saved_slice(
+                reader, field, prefix=prefix,
+                keep=lambda ts: [rx.fullmatch(t) is not None for t in ts],
+            )
+            return tuple((t, found[t])
+                         for t in sorted(found)[: self.max_expansion])
         ts = self.index.term_stats.filter(F.col("field") == field)
         if prefix:
             ts = ts.filter(F.col("term").startswith(prefix))
-        ts = ts.filter(F.col("term").rlike(java_regex))
+        ts = ts.filter(F.col("term").rlike(_wildcard_java_regex(regex)))
         rows = (
             ts.select("term", "df")
             .orderBy("term")
@@ -298,89 +391,100 @@ class Searcher:
         return tuple((r["term"], int(r["df"])) for r in rows)
 
     def _expand_wildcard(self, node: WildcardQuery) -> tuple:
-        """Concrete (term, df) list for a wildcard — constant-prefix
-        ``startswith`` + anchored ``rlike`` pushed into the term_stats scan
-        (wildcard-term-enum.lisp:15-50 seeks the dictionary at the
-        constant prefix; here the prefix prunes parquet files)."""
+        """Concrete (term, df) list for a wildcard through
+        ``_pattern_scan`` (wildcard-term-enum.lisp:15-50 seeks the
+        dictionary at the constant prefix; here the prefix prunes parquet
+        row groups)."""
         key = ("wild", node.field, node.pattern, self.max_expansion)
         if key in self._exp_cache:
             return self._exp_cache[key]
         out = self._pattern_scan(
-            node.field, node.literal_prefix(),
-            _wildcard_java_regex(node.to_regex()),
+            node.field, node.literal_prefix(), node.to_regex()
         )
         return self._exp_cache_put(key, out)
 
     def _expand_regexp(self, node) -> tuple:
         """Concrete (term, df) list for an anchored regex — the same
-        ``_pattern_scan`` pushdown as wildcard (literal prefix +
-        whole-term rlike, LIMIT at scan time). Java-side anchor:
-        ``^(?:pat)\\z``."""
+        ``_pattern_scan`` as wildcard (literal prefix + whole-term
+        match): ``(?:pat)\\Z`` in Python, ``^(?:pat)\\z`` in Java."""
         key = ("regexp", node.field, node.pattern, self.max_expansion)
         if key in self._exp_cache:
             return self._exp_cache[key]
         out = self._pattern_scan(
             node.field, node.literal_prefix(),
-            "^(?:" + node.pattern + ")\\z",
+            "(?:" + node.pattern + ")\\Z",
         )
         return self._exp_cache_put(key, out)
 
     def _expand_fuzzy(self, node: FuzzyQuery) -> tuple:
-        """Concrete (term, df, sim) list for a fuzzy term. Pushdown scan:
-        length BETWEEN bounds (any in-threshold term satisfies
-        len(q)/(2-ms) <= len(t) <= len(q)*(2-ms), from dist >= |len
-        difference| and dist <= (1-ms)*min_len) + constant-prefix
-        startswith prune parquet files; the exact JVM levenshtein
-        predicate filters the pruned slice; LIMIT at scan time."""
+        """Concrete (term, df, sim) list for a fuzzy term, truncated to
+        ``max_expansion`` by (sim desc, term asc) — a lexicographic limit
+        could drop the nearest spellings at web vocabularies (Lucene's
+        priority-queue semantics) — and returned in term order."""
         ms = node.min_similarity
         key = ("fuzzy", node.field, node.term, ms, node.prefix_length,
                self.max_expansion)
         if key in self._exp_cache:
             return self._exp_cache[key]
-        # truncation keeps the BEST terms (sim desc, term asc) — a
-        # lexicographic limit could drop the nearest spellings at web
-        # vocabularies (Lucene's priority-queue semantics)
-        rows = self._fuzzy_scan(node, [F.desc("_sim"), F.asc("term")],
-                                self.max_expansion)
-        out = tuple(
-            sorted((r["term"], int(r["df"]), float(r["_sim"]))
-                   for r in rows)
-        )
+        out = tuple(sorted(self._fuzzy_scan(node, False, self.max_expansion)))
         return self._exp_cache_put(key, out)
 
-    def _fuzzy_scan(self, node: FuzzyQuery, order, limit: int):
-        """The fuzzy candidate pushdown scan (length bounds + optional
-        prefix into the term_stats scan, JVM levenshtein on the pruned
-        slice) with a caller-chosen (order, limit) — `_expand_fuzzy`
-        truncates by (sim desc, term asc), `spell_correct` by
-        (sim desc, df desc, term asc)."""
-        import math as _m
+    def _fuzzy_scan(self, node: FuzzyQuery, by_df: bool,
+                    limit: int) -> list:
+        """The fuzzy candidates as (term, df, sim), ordered (sim desc,
+        term asc) — (sim desc, df desc, term asc) with ``by_df``, for
+        ``spell_correct`` — and truncated to ``limit``. Any in-threshold
+        term satisfies len(q)/(2-ms) <= len(t) <= len(q)*(2-ms) (from
+        dist >= |len difference| and dist <= (1-ms)*min_len).
 
+        On a saved layout: a seek at the constant prefix, the length
+        bounds and a numpy Levenshtein (``_fuzzy_sims``) filter each
+        file's slice. Otherwise: length BETWEEN + prefix pushed into the
+        term_stats scan, the JVM levenshtein on the pruned slice, order
+        and LIMIT at scan time. Both compute sim as
+        ``1.0 - dist / float(min(len(q), len(t)))``."""
         q = node.term
         L = len(q)
         ms = node.min_similarity
-        lo = max(1, int(_m.ceil(L / (2.0 - ms))))
-        hi = int(_m.floor(L * (2.0 - ms)))
+        lo = max(1, int(math.ceil(L / (2.0 - ms))))
+        hi = int(math.floor(L * (2.0 - ms)))
+        prefix = q[: node.prefix_length] if node.prefix_length > 0 else ""
+        reader = self.index._term_stats_dataset()
+        if reader is not None:
+            def keep(terms):
+                lens = np.fromiter(map(len, terms), np.int64, len(terms))
+                ok = (lens >= lo) & (lens <= hi)
+                idx = np.flatnonzero(ok)
+                ok[idx] = _fuzzy_sims(q, [terms[i] for i in idx]) >= ms
+                return ok
+
+            found = _saved_slice(reader, node.field, prefix=prefix, keep=keep)
+            terms = list(found)
+            sims = _fuzzy_sims(q, terms).tolist()
+            rows = [(t, found[t], s) for t, s in zip(terms, sims)]
+            rows.sort(key=(lambda r: (-r[2], -r[1], r[0])) if by_df
+                      else (lambda r: (-r[2], r[0])))
+            return rows[:limit]
         ts = self.index.term_stats.filter(
             (F.col("field") == node.field)
             & F.length("term").between(lo, hi)
         )
-        if node.prefix_length > 0:
-            ts = ts.filter(
-                F.col("term").startswith(q[: node.prefix_length])
-            )
+        if prefix:
+            ts = ts.filter(F.col("term").startswith(prefix))
         dist = F.levenshtein(F.col("term"), F.lit(q))
         sim = F.lit(1.0) - dist / F.least(
             F.lit(L), F.length("term")
         ).cast("double")
-        return (
+        order = [F.desc("_sim")] + ([F.desc("df")] if by_df else [])
+        rows = (
             ts.withColumn("_sim", sim)
             .filter(F.col("_sim") >= ms)
             .select("term", "df", "_sim")
-            .orderBy(*order)
+            .orderBy(*order, F.asc("term"))
             .limit(limit)
             .collect()
         )
+        return [(r["term"], int(r["df"]), float(r["_sim"])) for r in rows]
 
     @staticmethod
     def _exact_pairs(q: Query) -> tuple[set, bool]:
@@ -1518,33 +1622,31 @@ class Searcher:
         (sim desc, df desc, term asc), the exact ``term`` excluded.
         sim = 1 − levenshtein/min_len — the fuzzy-query family.
 
-        Rides the fuzzy candidate pushdown scan (length bounds +
-        optional prefix reach the parquet scan, JVM levenshtein filters
-        the pruned slice — never a vocabulary collect) with its OWN
-        truncation order — (sim desc, df desc, term asc) at scan time,
-        so a same-sim higher-df suggestion can never be cut the way the
-        fuzzy expansion's (sim desc, term asc) boundary could at web
-        vocabularies."""
+        Rides the fuzzy candidate enum (``_fuzzy_scan``: a prefix seek
+        into the saved dictionary with a numpy Levenshtein, or the length
+        + prefix pushdown scan with the JVM levenshtein — never a
+        vocabulary collect) with its OWN truncation order — (sim desc,
+        df desc, term asc), so a same-sim higher-df suggestion can never
+        be cut the way the fuzzy expansion's (sim desc, term asc)
+        boundary could at web vocabularies."""
         node = FuzzyQuery(field, term, min_similarity, prefix_length)
-        rows = self._fuzzy_scan(
-            node,
-            [F.desc("_sim"), F.desc("df"), F.asc("term")],
-            n + 1,  # the exact term may occupy one slot
-        )
-        return [
-            (r["term"], int(r["df"]), float(r["_sim"]))
-            for r in rows
-            if r["term"] != term
-        ][:n]
+        rows = self._fuzzy_scan(node, True, n + 1)  # +1: the exact term
+        return [r for r in rows if r[0] != term][:n]
 
     def suggest(self, field: str, prefix: str, n: int = 10) -> list:
         """Prefix autocomplete over the term dictionary (beyond-reference,
         labeled): the ``n`` highest-df terms starting with ``prefix``, as
         (term, df) tuples ordered (df desc, term asc).
 
-        The predicate is a ``startswith`` pushdown into the range-sorted
-        term_stats parquet (min/max file pruning — the .tii seek analog);
-        only the k result rows reach the driver, never the vocabulary."""
+        On a saved layout it is a prefix range seek into the range-sorted
+        dictionary (footer-pruned, no Spark job; df summed over a union's
+        segments); otherwise a ``startswith`` pushdown into the term_stats
+        scan with the order and limit at scan time. Neither collects the
+        vocabulary."""
+        reader = self.index._term_stats_dataset()
+        if reader is not None:
+            found = _saved_slice(reader, field, prefix=prefix)
+            return sorted(found.items(), key=lambda r: (-r[1], r[0]))[:n]
         scan = self.index.term_stats.filter(F.col("field") == field)
         if prefix:
             scan = scan.filter(F.col("term").startswith(prefix))

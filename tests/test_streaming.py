@@ -13,6 +13,7 @@ from montezuma_spark.search import (
     PhraseQuery,
     Searcher,
     TermQuery,
+    WildcardQuery,
     bool_query,
 )
 from montezuma_spark.streaming import IncrementalIndexer
@@ -281,18 +282,28 @@ def test_stale_union_never_serves_empty(spark, tmp_path):
     for i, b in enumerate(_batches(spark, n=60, parts=2)):
         ix.add_batch(b, batch_id=i)
     warm_q, cold_q = TermQuery("text", "spark"), TermQuery("text", "merge")
-    want = {q: Searcher(ix.multi_index()).top_docs(q, k=10)
-            for q in (warm_q, cold_q)}
-    assert all(want.values())
+    wild_q = WildcardQuery("text", "s*")
+    fresh = Searcher(ix.multi_index())
+    want = {q: fresh.top_docs(q, k=10) for q in (warm_q, cold_q, wild_q)}
+    want_sugg = fresh.suggest("text", "s", n=5)
+    assert all(want.values()) and want_sugg
     warm = Searcher(ix.multi_index())
     assert warm.top_docs(warm_q, k=10) == want[warm_q]
+    assert warm.top_docs(wild_q, k=10) == want[wild_q]
     unopened = Searcher(ix.multi_index())
     ix.compact()
-    for s, q in ((warm, warm_q), (warm, cold_q), (unopened, warm_q)):
+    for s, q in ((warm, warm_q), (warm, cold_q), (unopened, warm_q),
+                 (warm, wild_q), (unopened, wild_q)):
         try:
             got = s.top_docs(q, k=10)
         except FileNotFoundError:
             continue
         assert got == want[q]
+    for s in (warm, unopened):
+        try:
+            got = s.suggest("text", "s", n=5)
+        except FileNotFoundError:
+            continue
+        assert got == want_sugg
     with pytest.raises(FileNotFoundError):
         unopened.top_docs(cold_q, k=10)

@@ -35,10 +35,12 @@ def main():
     from montezuma_spark.index import FieldConfig, IndexConfig, build_index
     from montezuma_spark.search import (
         MUST,
+        FuzzyQuery,
         PhraseQuery,
         Searcher,
         SpanNearQuery,
         TermQuery,
+        WildcardQuery,
         bool_query,
     )
 
@@ -109,6 +111,12 @@ def main():
         "q_hot_span": SpanNearQuery.of(
             "text", [hot_term, second], slop=4
         ),
+        # dictionary expansion: the saved tier seeks term_stats
+        # driver-direct (a prefix range read; for fuzzy, a numpy
+        # Levenshtein over the length-pruned field slice), the *_spark
+        # arm runs the term_stats scan
+        "q_wildcard": WildcardQuery("text", hot_term[:-1] + "*"),
+        "q_fuzzy": FuzzyQuery("text", hot_term, 0.6),
     }
     import statistics
 
